@@ -100,8 +100,8 @@ object Rehive {
       col("direct_commission_rate"), col("passive_commission_rate"))
     // rates ride per-row (packages differ) — inline attribute() with
     // per-row rates rather than constants. Callers batching several
-    // dataflows over one referral graph pass the closure in
-    // (materialized-view reuse — the walk is 10 joins, build it once).
+    // dataflows over one referral graph pass the closure in, persisted
+    // (materialized-view reuse: the walk reads the whole edge table).
     val anc = ancestorsOpt.getOrElse(Commission.ancestors(d.referrals, 10))
     val direct = events.select(col("redemption_id"),
       col("creator_id").as("user_id"),

@@ -22,16 +22,26 @@ object Scratch {
     java.security.MessageDigest.getInstance("MD5")
       .digest(k.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
+  /** Where every application's scratch root lives: the JVM's temp
+    * directory (`java.io.tmpdir`), so replay staging follows wherever
+    * the caller points it. */
+  private def tmpRoot: java.io.File =
+    new java.io.File(System.getProperty("java.io.tmpdir")).getAbsoluteFile
+
+  private def scratchName(s: SparkSession): String =
+    s"graft_scratch_${s.sparkContext.applicationId}"
+
   /** Per-application scratch directory for (tag, dataset-key). */
   def dir(s: SparkSession, tag: String, k: String): String =
-    s"/tmp/graft_scratch_${s.sparkContext.applicationId}/${tag}_${key(k)}"
+    new java.io.File(new java.io.File(tmpRoot, scratchName(s)),
+      s"${tag}_${key(k)}").getPath
 
   /** Sanitized application id, safe inside a SQL table identifier. */
   def appTag(s: SparkSession): String =
     s.sparkContext.applicationId.toLowerCase.replaceAll("[^a-z0-9]", "_")
 
   /** Per-application STATE-TABLE key: sanitized appId + dataset
-    * digest. Embedding the appId (exactly as `dir` does for /tmp
+    * digest. Embedding the appId (exactly as `dir` does for scratch
     * paths) means two concurrent sessions or parallel test forks
     * sharing a warehouse directory can never name — and therefore
     * never overwrite or sweep — each other's live state tables. */
@@ -77,19 +87,19 @@ object Scratch {
           f.getParentFile == wh
       }
     stale.foreach(wipeTree)
-    // Same janitor for /tmp REPLAY-STAGING roots (`dir` above):
+    // Same janitor for the REPLAY-STAGING roots under `tmpRoot` (`dir` above):
     // appId-keyed scratch of crashed/completed runs otherwise
     // accumulates until legitimate shuffle spill hits ENOSPC — the
     // round-9 sf30 incident: ~26 GB of dead-app staging left 8 GB for
     // a 180M-row sort's spill. Scoped identically: the fixed
     // graft_scratch_ prefix, never this application's own root, only
     // dirs old enough that no concurrent session can be live in them.
-    val tmpKids = new java.io.File("/tmp").listFiles()
+    val tmpKids = tmpRoot.listFiles()
     val staleTmp =
       if (tmpKids == null) Array.empty[java.io.File]
       else tmpKids.filter { f =>
         f.isDirectory && f.getName.startsWith("graft_scratch_") &&
-          f.getName != s"graft_scratch_${s.sparkContext.applicationId}" &&
+          f.getName != scratchName(s) &&
           f.lastModified() < cutoff
       }
     staleTmp.foreach(wipeTree)
@@ -112,9 +122,8 @@ object Scratch {
       kids.filter(f => f.isDirectory && f.getParentFile == wh &&
           f.getName.matches("graft_state_[a-z0-9_]+") && f.getName.contains(tag))
         .foreach(wipeTree)
-    // and this run's /tmp replay-staging root
-    wipeTree(new java.io.File(
-      s"/tmp/graft_scratch_${s.sparkContext.applicationId}"))
+    // and this run's replay-staging root
+    wipeTree(new java.io.File(tmpRoot, scratchName(s)))
   }
 
   /** Delete the stale warehouse directory of a catalog-unknown state

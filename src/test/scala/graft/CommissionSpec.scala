@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Commission
 
 /** Unit tests for the commission dataflow against the reference's exact
   * semantics (FIXTURES.md §B canonical scenario; reference behavior at
   * render-complete-deploy.js:246-316). */
-class CommissionSpec extends AnyFunSuite {
+class CommissionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
@@ -38,6 +42,92 @@ class CommissionSpec extends AnyFunSuite {
     import spark.implicits._
     val anc = Commission.ancestors(chainEdges(), 10)
     assert(anc.filter($"descendant" === "u0").count() == 0)
+  }
+
+  /** Seeded random recursive forest: user i ≥ 1 is referred by a uniform
+    * pick among users 0..i−1 (fan-out at the top, walks deeper than 10
+    * levels), and the root u0 carries one edge with a NULL referrer. */
+  def randomForest(n: Int, seed: Long): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    ("u0", null: String) +: (1 until n).map(i => (s"u$i", s"u${rnd.nextInt(i)}"))
+  }
+
+  /** The reference's walk (render-complete-deploy.js:259-301), one user
+    * at a time: up to `maxLevels` hops, ending at a missing edge or
+    * after emitting a NULL referrer. */
+  def walk(edges: Seq[(String, String)], maxLevels: Int): Seq[(String, String, Long)] = {
+    val up = edges.toMap
+    edges.flatMap { case (d, _) =>
+      val out = Seq.newBuilder[(String, String, Long)]
+      var cur = d
+      var lvl = 1L
+      while (lvl <= maxLevels && cur != null && up.contains(cur)) {
+        out += ((d, up(cur), lvl))
+        cur = up(cur)
+        lvl += 1
+      }
+      out.result()
+    }
+  }
+
+  test("closure on a random 3,000-user forest matches a plain walk, NULL referrer included") {
+    import spark.implicits._
+    val edges = randomForest(3000, 7L)
+    val expected = walk(edges, 10)
+    assert(expected.exists(_._3 == 10L), "the forest must have walks reaching the cutoff")
+    assert(expected.exists(_._2 == null), "the root's NULL referrer must be reached")
+    val anc = Commission.ancestors(edges.toDF("referred_id", "referrer_id"), 10)
+    assert(anc.schema.map(f => (f.name, f.dataType.typeName)) ==
+      Seq(("descendant", "string"), ("ancestor", "string"), ("level", "long")))
+    val got = anc.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    def census(rows: Seq[(String, String, Long)]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+    assert(got.size == expected.size)
+    assert(census(got) == census(expected))
+  }
+
+  /** Jobs started while `body` runs, counted with a SparkListener. Job
+    * starts arrive on the listener bus in order, so `body` is bracketed
+    * between two marker jobs and only what starts between them counts. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("job"))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-begin")
+      body
+      marker("jobs-end")
+      val deadline = System.currentTimeMillis() + 30000
+      while (!starts.contains("jobs-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val seen = starts.toArray.toSeq
+    assert(seen.contains("jobs-end"), seen)
+    seen.dropWhile(_ != "jobs-begin").drop(1).takeWhile(_ != "jobs-end").size
+  }
+
+  test("closure plans one broadcast, reused per level, no shuffle, in 2 jobs") {
+    import spark.implicits._
+    def closure() =
+      Commission.ancestors(randomForest(3000, 11L).toDF("referred_id", "referrer_id"), 10)
+    // building and materializing the closure: one broadcast job, one scan job
+    assert(jobsDuring(closure().collect()) <= 2)
+    // count() adds only its own final aggregation job on top
+    assert(jobsDuring(closure().count()) <= 3)
+    val anc = closure()
+    anc.collect()
+    val plan = anc.queryExecution.executedPlan
+    assert(collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }.size == 1, plan)
+    assert(collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.size == 8, plan)
+    assert(collectWithSubqueries(plan) { case x: ShuffleExchangeExec => x }.isEmpty, plan)
   }
 
   test("canonical redemption: direct 10 to creator, passive 5x10, profit 40") {

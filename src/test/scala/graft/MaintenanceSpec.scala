@@ -123,6 +123,32 @@ class MaintenanceSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $liveName")
   }
 
+  test("replay staging and its janitor live under java.io.tmpdir") {
+    val S = graft.engine.Scratch
+    val saved = System.getProperty("java.io.tmpdir")
+    val root = java.nio.file.Files.createTempDirectory("graft_tmpdir_test").toFile
+    try {
+      System.setProperty("java.io.tmpdir", root.getPath)
+      val staging = new java.io.File(S.dir(spark, "replay", dir))
+      assert(staging.getParentFile.getParentFile == root.getAbsoluteFile, staging)
+      // a dead application's aged root there is swept, this one's is kept
+      val dead = new java.io.File(root, "graft_scratch_local-0000000000000")
+      new java.io.File(dead, "replay_x").mkdirs()
+      dead.setLastModified(System.currentTimeMillis() - 24L * 3600 * 1000)
+      staging.mkdirs()
+      staging.getParentFile.setLastModified(System.currentTimeMillis() - 24L * 3600 * 1000)
+      S.sweepAgedState(spark)
+      assert(!dead.exists(), "aged scratch root of another application should be swept")
+      assert(staging.exists(), "this application's scratch root was swept")
+    } finally {
+      System.setProperty("java.io.tmpdir", saved)
+      def wipe(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(wipe)); f.delete(); ()
+      }
+      wipe(root)
+    }
+  }
+
   test("incremental aggregate maintenance is bit-identical to full recompute") {
     import spark.implicits._
     val orders = graft.engine.Tables.orders(spark, dir)
