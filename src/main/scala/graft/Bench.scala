@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine._
 
 /** Headline benchmark. Protocol (variance-controlled, r5):
@@ -35,33 +34,6 @@ object Bench {
   private val SREPEATS =
     sys.env.getOrElse("SPARK_GRAFT_REPEATS_STREAM", (REPEATS + 2).toString).toInt
 
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Query surface grouped by declaring module. Must cover
-    * SparkEntry.queries exactly — asserted in main, with any stragglers
-    * timed under an "other" family rather than silently dropped. */
-  private def families: Seq[(String, Map[String, Q])] = Seq(
-    "relational" -> Relational.queries,
-    "aggregates" -> Aggregates.queries,
-    "scalar"     -> Scalar.queries,
-    "commission" -> Commission.queries,
-    "windows"    -> Windows.queries,
-    "textops"    -> TextOps.queries,
-    "dedup"      -> Dedup.queries,
-    "similarity" -> Similarity.queries,
-    "multimodal" -> Multimodal.queries,
-    "refshapes"  -> RefShapes.queries,
-    "extended"   -> Extended.queries,
-    "pipeline"   -> Pipeline.queries,
-    "rehive"     -> graft.api.Rehive.queries,
-    "chunking"   -> Chunking.queries,
-    "sketches"   -> Sketches.queries,
-    "timeseries" -> TimeSeries.queries,
-    "graph"      -> Graph.queries,
-    "sources"    -> graft.sources.SourceQueries.queries,
-    "profiling"  -> Profiling.queries,
-    "retrieval"  -> Retrieval.queries)
-
   /** 1-minute system load average at call time (-1.0 if unreadable).
     * Emitted at run start AND end so a contended run is
     * self-identifying: the r6 official record was ~1.5× inflated by
@@ -72,15 +44,6 @@ object Bench {
       .getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
 
-  /** Wait for the machine to go idle before timing anything: poll the
-    * 1-minute loadavg until it drops under SPARK_GRAFT_IDLE_MAX
-    * (default 1.0) or SPARK_GRAFT_IDLE_WAIT_MAX seconds elapse
-    * (default 600 — 1-min load decays ~2× per minute, so a run
-    * launched right after an oracle sweep self-heals in 2–4 min
-    * instead of recording a contaminated total). Set
-    * SPARK_GRAFT_IDLE_WAIT_MAX=0 to skip. The start loadavg is
-    * re-read AFTER the wait, so the emitted loadavg_start reflects
-    * the run that was actually timed. */
   /** Fixed CPU microbenchmark (million integer ops/sec, single thread
     * then all cores): a machine-speed constant that ships INSIDE every
     * bench line. Round 9's official sf0.1 record regressed ~9% with an
@@ -145,15 +108,51 @@ object Bench {
     (sha, dirty)
   }
 
+  /** CPU cores that processes other than this JVM kept busy over the
+    * last `secs` seconds: the machine's busy ticks in /proc/stat (in
+    * USER_HZ = 1/100 s) minus this process's own CPU time, per second
+    * of wall time. None if /proc/stat is unreadable. */
+  private def othersBusyCores(secs: Int): Option[Double] = {
+    val self = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // cpu user nice system idle iowait irq softirq steal [guest …]:
+    // guest time is already inside user, idle and iowait are not busy
+    def busyTicks(): Option[Long] =
+      try {
+        val f = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get("/proc/stat")).get(0)
+          .trim.split("\\s+").drop(1).take(8).map(_.toLong)
+        Some(f.sum - f(3) - f(4))
+      } catch { case _: Throwable => None }
+    val t0 = System.nanoTime(); val c0 = self.getProcessCpuTime
+    busyTicks().flatMap { b0 =>
+      Thread.sleep(secs * 1000L)
+      busyTicks().map { b1 =>
+        val wall = (System.nanoTime() - t0) / 1e9
+        val own = (self.getProcessCpuTime - c0) / 1e9
+        math.max(0.0, ((b1 - b0) / 100.0 - own) / wall)
+      }
+    }
+  }
+
+  /** Wait for the machine to go idle before timing anything: while
+    * other processes keep more than SPARK_GRAFT_IDLE_MAX cores busy
+    * (default 1.0, sampled over 3 s), wait, for at most
+    * SPARK_GRAFT_IDLE_WAIT_MAX seconds (default 600; 0 skips the
+    * check). Measuring the others' CPU use directly, not the 1-minute
+    * load average, lets a run start right after a previous one: that
+    * run's own load keeps the average above 1 for minutes after it
+    * ends. If /proc/stat is unreadable, nothing waits. */
   private def awaitIdle(): Unit = {
     val maxWait = sys.env.getOrElse("SPARK_GRAFT_IDLE_WAIT_MAX", "600").toInt
     val idleMax = sys.env.getOrElse("SPARK_GRAFT_IDLE_MAX", "1.0").toDouble
     val deadline = System.currentTimeMillis() + maxWait * 1000L
-    var l = loadavg()
-    while (l > idleMax && System.currentTimeMillis() < deadline) {
-      Console.err.println(f"[bench] waiting for idle: loadavg $l%.2f > $idleMax%.1f")
-      Thread.sleep(15000)
-      l = loadavg()
+    var waiting = maxWait > 0
+    while (waiting) othersBusyCores(3) match {
+      case Some(busy) if busy > idleMax && System.currentTimeMillis() < deadline =>
+        Console.err.println(
+          f"[bench] waiting for idle: others busy on $busy%.2f cores > $idleMax%.1f")
+      case _ => waiting = false
     }
   }
 
@@ -168,20 +167,7 @@ object Bench {
     val (gitSha, gitDirty) = gitStamp()
     val (hostSt, hostMt) = hostProbe()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The fixture shuffles are all sub-MB, so AQE's size-based
-      // coalescing folds every post-shuffle stage to ONE partition —
-      // serializing the compute-bound stages (cosine, hamming) that the
-      // shuffle was supposed to parallelize. Data is tiny but work is
-      // not; keep the fixed width. (At real scale, sizes are honest and
-      // coalescing is right — leave it on there.)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     // warehouse janitor: reclaim state dirs left by crashed/old runs
     try Scratch.sweepAgedState(spark) catch { case _: Throwable => () }
 
@@ -192,25 +178,6 @@ object Bench {
       SparkEntry.entry(spark).count()
       SessionMemo.releaseAll(spark)
     } catch { case _: Throwable => () }
-
-    val declared = SparkEntry.queries
-    val covered = families.flatMap(_._2.keys).toSet
-    val stragglers = declared.view.filterKeys(!covered(_)).toMap
-    val plan0: Seq[(String, Map[String, Q])] =
-      if (stragglers.isEmpty) families else families :+ ("other" -> stragglers)
-    // SPARK_GRAFT_ONLY=q01_...,q64_... restricts the run to a subset —
-    // the scaling-curve rungs (SCALE.md) time the headline set at big
-    // sf without paying for fixture-artifact queries whose OUTPUT grows
-    // quadratically in ScaleUp copies (q68: every copy pair is a
-    // genuine near-dup pair).
-    val plan: Seq[(String, Map[String, Q])] =
-      sys.env.get("SPARK_GRAFT_ONLY") match {
-        case Some(csv) =>
-          val sel = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          plan0.map { case (f, m) => f -> m.view.filterKeys(sel).toMap }
-            .filter(_._2.nonEmpty)
-        case None => plan0
-      }
 
     val med = scala.collection.mutable.Map.empty[String, Double]
     val mn = scala.collection.mutable.Map.empty[String, Double]
@@ -229,14 +196,19 @@ object Bench {
     // an invisible subsidy. Additions-only: no timed-run protocol
     // change.
     val famWarm = scala.collection.mutable.Map.empty[String, Double]
-    for ((famName, fam) <- plan) {
-      val qs = fam.toSeq.sortBy(_._1)
+    // SPARK_GRAFT_ONLY=q01_...,q64_... restricts the run to a subset —
+    // the scaling-curve rungs (SCALE.md) time the headline set at big
+    // sf without paying for fixture-artifact queries whose OUTPUT grows
+    // quadratically in ScaleUp copies (q68: every copy pair is a
+    // genuine near-dup pair).
+    for (fam <- SparkEntry.selected) {
+      val qs = fam.queries.toSeq.sortBy(_._1)
       // family warm-up: builds this family's shared spines and compiles
       // every generated class, so timed runs measure steady state
       val w0 = System.nanoTime()
       qs.foreach { case (_, fn) =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () } }
-      famWarm(famName) = (System.nanoTime() - w0) / 1e9
+      famWarm(fam.name) = (System.nanoTime() - w0) / 1e9
       qs.foreach { case (name, fn) =>
         val reps = if (streamReplays(name)) SREPEATS else REPEATS
         // (elapsed, succeeded) per repeat: a throwing repeat records
@@ -258,7 +230,7 @@ object Bench {
         mn(name) = ts.head
         mx(name) = ts.last
       }
-      famTot(famName) = qs.map { case (n, _) => med.getOrElse(n, 0.0) }.sum
+      famTot(fam.name) = qs.map { case (n, _) => med.getOrElse(n, 0.0) }.sum
       // bound resident cache to one family: drop spines + cached plans,
       // and nudge the ContextCleaner to reap localCheckpoint blocks
       SessionMemo.releaseAll(spark)

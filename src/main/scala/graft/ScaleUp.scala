@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf0.1 → sf1 scale-up generator (dev tool, not part of
@@ -55,16 +55,11 @@ object ScaleUp {
     val out = if (args.nonEmpty) args(0) else "/tmp/sf1"
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      // the fixture's events.ts is TIMESTAMP(NANOS): read it as a raw
-      // long and write it back as a raw long — the loaders' nanos
-      // handling then applies to the generated dir identically
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
+    // the fixture's events.ts is TIMESTAMP(NANOS): read it as a raw
+    // long and write it back as a raw long — the loaders' nanos
+    // handling then applies to the generated dir identically
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import spark.implicits._
 
     // shift receives (table, key offset k·Stride, copy index k) — the

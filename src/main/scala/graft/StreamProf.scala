@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev-only stream-replay profiler (the round-8 stall hunt): runs the
@@ -20,13 +19,7 @@ object StreamProf {
       else Seq("q43_stream_tumbling")
     val reps = args.lastOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(6)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
 
     // progress log: (query runId, batchId, trigger timestamp, durations)
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()

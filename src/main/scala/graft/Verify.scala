@@ -1,34 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // see Bench.scala: sub-MB fixture shuffles + compute-bound stages
-      // → size-based coalescing would serialize the kernels
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     // warehouse janitor: reclaim state dirs left by crashed/old runs
     try graft.engine.Scratch.sweepAgedState(spark) catch { case _: Throwable => () }
     new java.io.File(outDir).mkdirs()
-    // Dev-loop subset filter (same contract as Bench): a csv of query
-    // names restricts the dump; unset = full surface (the driver's mode).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    // Dev-loop subset filter (same contract as Bench): SPARK_GRAFT_ONLY
+    // restricts the dump; unset = full surface (the driver's mode).
+    SparkEntry.selected.flatMap(_.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -785,9 +785,9 @@ object Dedup {
       // order. Per-doc state stays bounded by document size, so the
       // shape holds on 100 TB doc counts.
       // Round 13, §3.1: the rarity join rides SHUFFLE_HASH — the
-      // sort-merge default paid corpus-sized sorts (plans/r13/
-      // q100_before_sf30.txt ops (27)/(33)/(42)/(47): the 78M-row
-      // spine and the 8.2M-row dictionary per self-join alias) for an
+      // sort-merge default planned a SortMergeJoin per self-join alias
+      // and sorted the 78M-row spine and the 8.2M-row dictionary for
+      // each of them at sf30 (four corpus-sized sorts) for an
       // equi-join whose build side is bounded per partition by
       // uniform 64-bit-hash keys: dfreq is the distinct-shingle
       // DICTIONARY (~8.2M × 16 B at sf30, ~4 MB per partition at

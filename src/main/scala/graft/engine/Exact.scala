@@ -70,10 +70,4 @@ object Exact {
     s"CAST(sum(${scaledSql(expr)}) AS DOUBLE)/10000.0"
   def mavgSql(expr: String): String =
     s"CAST(sum(${scaledSql(expr)}) AS DOUBLE)/CAST(count(*) AS DOUBLE)/10000.0"
-  /** Oracle twin of [[trunc6]]. */
-  def trunc6Sql(expr: String): String =
-    s"floor(($expr) * 1000000.0) / 1000000.0"
-  /** Oracle twin of [[round0]]. */
-  def round0Sql(expr: String): String =
-    s"floor(($expr) + 0.5)"
 }

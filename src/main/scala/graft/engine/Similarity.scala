@@ -1175,23 +1175,6 @@ object Similarity {
         |  ORDER BY cos_sim DESC, bench_id) = 1
         |ORDER BY vec_id""".stripMargin)
 
-  /** Product-quantization ANN with exact re-ranking: split the 64-dim
-    * embedding into `m` subspaces, learn a `kSub`-centroid codebook
-    * per subspace (spark.ml KMeans, fixed seeds), store each vector
-    * as `m` small codes — 32× compression at m=8/kSub=16 (8 bytes vs
-    * 256) — then answer queries by ADC (approximate cosine against
-    * the codebook-reconstructed vector, pure per-row arithmetic over
-    * the broadcast codebooks) and re-rank the top `rerank` candidates
-    * with the exact codegen'd cosine.
-    *
-    * Scale posture: the codebooks are m·kSub·(d/m) floats (KBs)
-    * broadcast everywhere; encoding is one map pass; queries never
-    * touch raw corpus vectors until the bounded re-rank fetch. At
-    * 100 TB this composes with IVF (encode within cells) — here the
-    * flat scan keeps the recall measurement interpretable, and
-    * `rerank ≥ corpus` degenerates to exact search (pinned in
-    * AnnRecallSpec).
-    */
   /** Composed embedding-side refinery (the q75 flagship's sibling for
     * vectors): one pass computes each vector's LSH shard and its int8
     * quantization error (pinned-order fold ⇒ bit-exact), the bucket-
@@ -1311,6 +1294,23 @@ object Similarity {
       .orderBy($"qid", $"rank")
   }
 
+  /** Product-quantization ANN with exact re-ranking: split the 64-dim
+    * embedding into `m` subspaces, learn a `kSub`-centroid codebook
+    * per subspace (spark.ml KMeans, fixed seeds), store each vector
+    * as `m` small codes — 32× compression at m=8/kSub=16 (8 bytes vs
+    * 256) — then answer queries by ADC (approximate cosine against
+    * the codebook-reconstructed vector, pure per-row arithmetic over
+    * the broadcast codebooks) and re-rank the top `rerank` candidates
+    * with the exact codegen'd cosine.
+    *
+    * Scale posture: the codebooks are m·kSub·(d/m) floats (KBs)
+    * broadcast everywhere; encoding is one map pass; queries never
+    * touch raw corpus vectors until the bounded re-rank fetch. At
+    * 100 TB this composes with IVF (encode within cells) — here the
+    * flat scan keeps the recall measurement interpretable, and
+    * `rerank ≥ corpus` degenerates to exact search (pinned in
+    * AnnRecallSpec).
+    */
   def pqTopK(s: SparkSession, dir: String, k: Int, rerank: Int,
              m: Int = 8, kSub: Int = 16, queryMod: Int = 25,
              seed: Long = 42L): DataFrame = {

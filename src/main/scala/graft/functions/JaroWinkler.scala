@@ -123,9 +123,6 @@ object JaroWinkler {
       (a: String, b: String) => jaroWinklerMicroN(a, b))
   }
 
-  def jaroMicroCol(a: Column, b: Column): Column =
-    udf((x: String, y: String) => jaroMicroN(x, y)).apply(a, b)
-
   def jaroWinklerMicroCol(a: Column, b: Column): Column =
     udf((x: String, y: String) => jaroWinklerMicroN(x, y)).apply(a, b)
 }

@@ -580,11 +580,6 @@ object Streams {
     events.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark(Seq("event_id"))
 
-  /** Custom-state sessionization with flatMapGroupsWithState — the
-    * §2.9 "UDF with state" extension point. Emits a session row when a
-    * 30-minute gap closes it; `GroupState` holds the open session.
-    * (Used by the streaming spec on a MemoryStream; batch-oracle
-    * equivalence is covered by q42's window construction.) */
   /** Per-key streaming EWMA state: the SAME O(1) composed affine run
     * the batch aggregator keeps (graft.functions.EwmaAffine.Run,
     * minus the lo-span bookkeeping a single growing run never needs). */
@@ -768,6 +763,11 @@ object Streams {
       }
   }
 
+  /** Custom-state sessionization with flatMapGroupsWithState — the
+    * §2.9 "UDF with state" extension point. Emits a session row when a
+    * 30-minute gap closes it; `GroupState` holds the open session.
+    * (Used by the streaming spec on a MemoryStream; batch-oracle
+    * equivalence is covered by q42's window construction.) */
   def sessionizeStateful(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
     val gapUs = 30L * 60 * 1000000
