@@ -1,5 +1,6 @@
 package graft
 import graft.engine._
+import scala.util.control.NonFatal
 
 /** Headline benchmark. Protocol (variance-controlled, r5):
   *
@@ -42,7 +43,7 @@ object Bench {
   private def loadavg(): Double =
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Fixed CPU microbenchmark (million integer ops/sec, single thread
     * then all cores): a machine-speed constant that ships INSIDE every
@@ -90,7 +91,7 @@ object Bench {
         val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
         if (p.waitFor() == 0) out else ""
-      } catch { case _: Throwable => "" }
+      } catch { case NonFatal(_) => "" }
     // Resolve the repo root first (ADVICE r12): relative pathspecs
     // silently mis-reported when Bench was launched from a
     // subdirectory, and a top-level-only exclusion left other
@@ -123,7 +124,7 @@ object Bench {
           java.nio.file.Paths.get("/proc/stat")).get(0)
           .trim.split("\\s+").drop(1).take(8).map(_.toLong)
         Some(f.sum - f(3) - f(4))
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val t0 = System.nanoTime(); val c0 = self.getProcessCpuTime
     busyTicks().flatMap { b0 =>
       Thread.sleep(secs * 1000L)
@@ -169,7 +170,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus)
     // warehouse janitor: reclaim state dirs left by crashed/old runs
-    try Scratch.sweepAgedState(spark) catch { case _: Throwable => () }
+    try Scratch.sweepAgedState(spark) catch { case NonFatal(_) => () }
 
     // Session-level warm-up, untimed: parquet footer reads, the session
     // init, and the flagship entry (JIT + codegen compiler priming).
@@ -177,7 +178,7 @@ object Bench {
       Tables.all.foreach(t => Tables.table(spark, sfDir, t).count())
       SparkEntry.entry(spark).count()
       SessionMemo.releaseAll(spark)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     val med = scala.collection.mutable.Map.empty[String, Double]
     val mn = scala.collection.mutable.Map.empty[String, Double]
@@ -240,7 +241,7 @@ object Bench {
     // Round per-query seconds to 4 decimals to keep the line short, and
     // close with a duplicate "total_sec" so a tail-capture that eats the
     // line's HEAD still carries the headline number. The full line is
-    // also written to files, which log capture can't truncate.
+    // also written to /tmp/bench.json, which log capture can't truncate.
     def r4(v: Double): Double = math.round(v * 10000).toDouble / 10000
     def jmap(m: collection.Map[String, Double]): String =
       m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + r4(v) }
@@ -271,16 +272,16 @@ object Bench {
     println(line)
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","repeats":$REPEATS,"sf":"$sfDir",$loads,"median":${jmap(med)},"min":${jmap(mn)},"min_total_sec":$totalMin,"total_sec":$total}"""
-    for (p <- Seq("/tmp/bench.json", "bench_last.json"))
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), full + "\n")
-      catch { case _: Throwable => () }
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("/tmp/bench.json"), full + "\n")
+    catch { case NonFatal(_) => () }
     // LAST stdout line: a short summary WITHOUT the per-query map, so a
     // head-truncated tail-capture of stdout always contains at least one
     // complete, parseable JSON line.
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","n":${med.size},"min_total_sec":$totalMin,$loads,"sf":"$sfDir"}""")
     // graceful-shutdown cleanup: drop this run's own state tables
-    try Scratch.dropOwnState(spark) catch { case _: Throwable => () }
+    try Scratch.dropOwnState(spark) catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

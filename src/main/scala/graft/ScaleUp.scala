@@ -56,10 +56,9 @@ object ScaleUp {
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val copies = if (args.length > 2) args(2).toInt else 10
     val spark = Sessions.local(Sessions.cpus)
-    // the fixture's events.ts is TIMESTAMP(NANOS): read it as a raw
-    // long and write it back as a raw long — the loaders' nanos
-    // handling then applies to the generated dir identically
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the fixture's events.ts is TIMESTAMP(NANOS): the session reads it
+    // as a raw long and it is written back as a raw long — the loaders'
+    // nanos handling then applies to the generated dir identically
     import spark.implicits._
 
     // shift receives (table, key offset k·Stride, copy index k) — the

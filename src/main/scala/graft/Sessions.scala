@@ -7,8 +7,9 @@ object Sessions {
   /** Local cores for a main: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** `local[cpus]` with one shuffle partition per core, UTC, no UI and
-    * Spark logging at WARN. */
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI,
+    * nanosecond parquet timestamps read as raw longs (the event loaders
+    * normalize them) and Spark logging at WARN. */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -21,6 +22,7 @@ object Sessions {
       // coalescing is right — leave it on there.)
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,7 +8,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Sessions.local(Sessions.cpus)
     // warehouse janitor: reclaim state dirs left by crashed/old runs
-    try graft.engine.Scratch.sweepAgedState(spark) catch { case _: Throwable => () }
+    try graft.engine.Scratch.sweepAgedState(spark) catch { case NonFatal(_) => () }
     new java.io.File(outDir).mkdirs()
     // Dev-loop subset filter (same contract as Bench): SPARK_GRAFT_ONLY
     // restricts the dump; unset = full surface (the driver's mode).
@@ -34,7 +35,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // graceful-shutdown cleanup: drop this run's own state tables
-    try graft.engine.Scratch.dropOwnState(spark) catch { case _: Throwable => () }
+    try graft.engine.Scratch.dropOwnState(spark) catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -249,7 +249,7 @@ object Commission {
       require(bound < raisedLimit,
         s"recursion closure bound levels*|edges| = $bound exceeds the " +
           s"raised cteRecursionRowLimit $raisedLimit - refusing to raise")
-      val savedLimit = s.conf.get("spark.sql.cteRecursionRowLimit", "1000000")
+      val savedLimit = s.conf.getAll.get("spark.sql.cteRecursionRowLimit")
       // the measured-count gate (see the strategy comment above); the
       // hint changes the join's physical strategy only, never a row
       val smallEdges = edgeCount <= 200000L
@@ -277,7 +277,8 @@ object Commission {
           .localCheckpoint()
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", saved)
-        s.conf.set("spark.sql.cteRecursionRowLimit", savedLimit)
+        savedLimit.fold(s.conf.unset("spark.sql.cteRecursionRowLimit"))(
+          s.conf.set("spark.sql.cteRecursionRowLimit", _))
       }
     }),
 

@@ -307,7 +307,7 @@ object Extended {
       import s.implicits._
       val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
+      val saved = keys.map(k => k -> s.conf.getAll.get(k)).toMap
       s.conf.set(keys(0), "-1")
       s.conf.set(keys(1), "0")
       try {

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Multimodal (image/audio/video) column support (SURVEY.md §2.10).
   *
@@ -91,7 +92,7 @@ object Multimodal {
         }
         Some(ImageFeatures(path, w, h, img.getRaster.getNumBands, hist))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** ==== STUB fallback ==== deterministic fake decode for bytes that
     * are not a JRE-readable image: fake dimensions and a 16-bin byte
@@ -164,7 +165,7 @@ object Multimodal {
         Some(AudioFeatures(path, fmt.getSampleRate.toInt, fmt.getChannels,
           nFrames, dur, rms))
       } finally ais.close()
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** ==== STUB fallback ==== deterministic fake audio features for
     * bytes that are not JRE-readable audio, derived from the raw bytes
@@ -272,7 +273,7 @@ object Multimodal {
           vid.flatMap(_._3).getOrElse("unknown"),
           vid.map(_._1).getOrElse(0), vid.map(_._2).getOrElse(0))
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** ==== STUB fallback ==== deterministic fake video metadata for
     * bytes that are not ISO-BMFF, derived from the byte length (same

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scratch-path discipline for queries that materialize roundtrip
   * artifacts (CSV/ORC/JSON/parquet rewrite jobs).
@@ -115,7 +116,7 @@ object Scratch {
     s.catalog.listTables().collect()
       .map(_.name).filter(n => n.startsWith("graft_state_") && n.contains(tag))
       .foreach(n =>
-        try s.sql(s"DROP TABLE IF EXISTS $n") catch { case _: Throwable => () })
+        try s.sql(s"DROP TABLE IF EXISTS $n") catch { case NonFatal(_) => () })
     val wh = warehouseDir(s)
     val kids = wh.listFiles()
     if (kids != null)
@@ -139,20 +140,11 @@ object Scratch {
     require(name.contains(appTag(s)),
       s"refusing to sweep another application's state dir: $name")
     if (!s.catalog.tableExists(name)) {
-      val whConf = s.conf.get("spark.sql.warehouse.dir")
-      val wh = new java.io.File(
-        if (whConf.startsWith("file:")) new java.net.URI(whConf).getPath
-        else whConf).getCanonicalFile
+      val wh = warehouseDir(s)
       val target = new java.io.File(wh, name.toLowerCase).getCanonicalFile
       require(target.getParentFile == wh,
         s"refusing to sweep outside the warehouse: $target")
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(wipe)
-        }
-        f.delete(); ()
-      }
-      wipe(target)
+      wipeTree(target)
     }
   }
 }

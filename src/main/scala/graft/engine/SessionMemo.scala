@@ -1,6 +1,7 @@
 package graft.engine
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -30,7 +31,7 @@ private[graft] final class SessionMemo[K] {
     val id = SessionMemo.idOf(s)
     m.keys.filter(_._1 == id).foreach { key =>
       m.remove(key).foreach { case (_, df) =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
       }
     }
   }
@@ -52,7 +53,7 @@ private[graft] object SessionMemo {
     * ContextCleaner once the dropped references are GC'd. */
   def releaseAll(s: SparkSession): Unit = {
     registry.forEach(_.release(s))
-    try s.sharedState.cacheManager.clearCache() catch { case _: Throwable => () }
+    try s.sharedState.cacheManager.clearCache() catch { case NonFatal(_) => () }
   }
 
   // WeakHashMap: identity-keyed, and the String value holds no

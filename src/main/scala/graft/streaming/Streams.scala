@@ -73,8 +73,10 @@ object Streams {
     // scaling win drowns in checkpoint I/O (measured ×2.8 on the q245
     // join state at sf30).
     val kc = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val saved = s.conf.getOption(k)
-    val savedC = s.conf.getOption(kc)
+    // getAll, not getOption: an unset key must be unset again afterwards,
+    // not pinned to the default getOption reports for it
+    val saved = s.conf.getAll.get(k)
+    val savedC = s.conf.getAll.get(kc)
     s.conf.set(k,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s.conf.set(kc, "true")

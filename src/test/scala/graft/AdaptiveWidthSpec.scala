@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Dedup.adaptiveWidth
 
 /** The data-following hash width (q62 buckets, q68 simhash blocks):
@@ -37,14 +35,7 @@ import graft.engine.Dedup.adaptiveWidth
   *    with n would silently change the query's recall semantics.
   *    The uncapped pair-search variant of the same bucketing is q62,
   *    which carries the adaptive rule. */
-class AdaptiveWidthSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AdaptiveWidthSpec extends SparkSuite {
   test("floor holds through the oracle sfs (outputs unchanged there)") {
     // bitlen(n-1)-5 stays <= 4 through n = 512 -> width 4 (16 bits
     // for q68's 4-block fingerprint, the original fixture width)

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Similarity, Tables => T}
 
 /** Measured ANN quality: recall@k of the bucketed searches against the
@@ -14,13 +12,10 @@ import graft.engine.{Similarity, Tables => T}
   * trade-off honest — an ANN that silently stopped recalling anything
   * would still pass its (self-consistent) oracle, but not this spec.
   */
-class AnnRecallSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnRecallSpec extends SparkSuite {
+  // every test runs at the 8-way shuffle width the suite was written for
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   val dir = "/root/testdata/sf0.01"
 

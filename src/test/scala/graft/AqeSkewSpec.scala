@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE skew-join evidence: the runtime complement to the explicit
   * salt-grid (SkewSpec) and salted-join (ops.SkewJoin) mitigations.
@@ -14,45 +12,38 @@ import org.scalatest.funsuite.AnyFunSuite
   * mark the sort-merge join `isSkew=true`, and the result must equal
   * the non-AQE join exactly.
   */
-class AqeSkewSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    .getOrCreate()
-
+class AqeSkewSpec extends SparkSuite {
   test("AQE splits the hot key's partition and result matches non-AQE join") {
-    import spark.implicits._
-    // 20k fact rows, half on key 0; dim has one row per key
-    val fact = spark.range(0, 20000)
-      .select(when($"id" % 2 === 0, 0L).otherwise($"id" % 97).as("k"),
-        $"id".as("payload"))
-    val dim = spark.range(0, 97).select($"id".as("k"), ($"id" * 10).as("dval"))
-    val joined = fact.join(dim, "k").select($"k", $"payload", $"dval")
-    // collect() executes THIS Dataset's QueryExecution (count() would
-    // build a separate one and leave this plan isFinalPlan=false)
-    val n = joined.collect().length.toLong
-    val finalPlan = joined.queryExecution.executedPlan.toString
-    assert(finalPlan.contains("isSkew=true") || finalPlan.contains("skew=true"),
-      s"expected AQE to mark the skewed SMJ partition:\n$finalPlan")
-    val expected = {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.adaptive.enabled", "false")
-      import s2.implicits._
-      val f = s2.range(0, 20000)
+    withConf(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
+      import spark.implicits._
+      // 20k fact rows, half on key 0; dim has one row per key
+      val fact = spark.range(0, 20000)
         .select(when($"id" % 2 === 0, 0L).otherwise($"id" % 97).as("k"),
           $"id".as("payload"))
-      val d = s2.range(0, 97).select($"id".as("k"), ($"id" * 10).as("dval"))
-      f.join(d, "k").count()
+      val dim = spark.range(0, 97).select($"id".as("k"), ($"id" * 10).as("dval"))
+      val joined = fact.join(dim, "k").select($"k", $"payload", $"dval")
+      // collect() executes THIS Dataset's QueryExecution (count() would
+      // build a separate one and leave this plan isFinalPlan=false)
+      val n = joined.collect().length.toLong
+      val finalPlan = joined.queryExecution.executedPlan.toString
+      assert(finalPlan.contains("isSkew=true") || finalPlan.contains("skew=true"),
+        s"expected AQE to mark the skewed SMJ partition:\n$finalPlan")
+      val expected = {
+        val s2 = spark.newSession()
+        s2.conf.set("spark.sql.adaptive.enabled", "false")
+        import s2.implicits._
+        val f = s2.range(0, 20000)
+          .select(when($"id" % 2 === 0, 0L).otherwise($"id" % 97).as("k"),
+            $"id".as("payload"))
+        val d = s2.range(0, 97).select($"id".as("k"), ($"id" * 10).as("dval"))
+        f.join(d, "k").count()
+      }
+      assert(n == expected, s"AQE skew split changed the result: $n vs $expected")
     }
-    assert(n == expected, s"AQE skew split changed the result: $n vs $expected")
   }
 }

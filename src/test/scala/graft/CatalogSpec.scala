@@ -11,22 +11,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * and shuffle-the-world; this spec pins both behaviors in the plan.
   */
 class CatalogSpec extends AnyFunSuite {
+  // The Hive catalog is a static setting, so this suite runs in its own
+  // test JVM; the width policy is the mains' (Sessions.local).
   lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.adaptive.enabled", "false") // stable plan asserts
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
-      .enableHiveSupport()
-      .getOrCreate()
+    val s = graft.engine.Catalog.hiveSession(
+      java.nio.file.Files.createTempDirectory("graft_wh").toString, "local[4]")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s
   }
+
+  /** Static plans with every join a sort-merge join, for the plan-shape
+    * asserts on bucketed layouts. */
+  private def smjPlans[T](body: => T): T = SparkSuite.withConf(spark)(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -51,11 +50,13 @@ class CatalogSpec extends AnyFunSuite {
     graft.engine.Tables.customer(spark, dir)
       .write.bucketBy(4, "c_custkey").sortBy("c_custkey")
       .mode("overwrite").saveAsTable("graft.customer_b")
-    val j = spark.table("graft.orders_b")
-      .join(spark.table("graft.customer_b"), col("o_custkey") === col("c_custkey"))
-    val plan = j.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
-    assert(j.count() > 0)
+    smjPlans {
+      val j = spark.table("graft.orders_b")
+        .join(spark.table("graft.customer_b"), col("o_custkey") === col("c_custkey"))
+      val plan = j.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
+      assert(j.count() > 0)
+    }
   }
 
   test("ANALYZE TABLE feeds the CBO row-count and size statistics") {
@@ -93,22 +94,16 @@ class CatalogSpec extends AnyFunSuite {
         .toDF("s_key", "s_label")
         .write.mode("overwrite").saveAsTable("graft.status_dim")
     }
-    // DPP (default reuseBroadcastOnly) piggybacks on the dim broadcast —
-    // re-enable broadcasting, which the suite globally disables to pin
-    // the bucketed-SMJ plan above.
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
-    try {
-      val joined = spark.table("graft.orders_p")
-        .join(spark.table("graft.status_dim")
-            .filter(col("s_label") === lit("finished")),
-          col("status_p") === col("s_key"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruning") || plan.contains("DynamicPruning"),
-        s"expected a dynamic pruning subquery in the fact scan:\n$plan")
-      assert(joined.count() ==
-        spark.table("graft.orders_p").filter(col("status_p") === "F").count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // DPP (default reuseBroadcastOnly) piggybacks on the dim broadcast
+    val joined = spark.table("graft.orders_p")
+      .join(spark.table("graft.status_dim")
+          .filter(col("s_label") === lit("finished")),
+        col("status_p") === col("s_key"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("dynamicpruning") || plan.contains("DynamicPruning"),
+      s"expected a dynamic pruning subquery in the fact scan:\n$plan")
+    assert(joined.count() ==
+      spark.table("graft.orders_p").filter(col("status_p") === "F").count())
   }
 
   test("catalog-mode parity: the FULL query surface over spark.table ≡ the parquet path") {
@@ -147,23 +142,24 @@ class CatalogSpec extends AnyFunSuite {
       graft.engine.Tables.lineitem(spark, dir), "graftb.lineitem", "l_orderkey", 8)
     graft.engine.Catalog.bucketize(
       graft.engine.Tables.orders(spark, dir), "graftb.orders", "o_orderkey", 8)
-    val q = SparkEntry.queries("q05_regional_revenue")
-    val pq = q(spark, dir)
-    val cat = q(spark, "metastore:graftb")
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
-    assert(exchanges(cat) < exchanges(pq),
-      s"bucketed layout should drop join exchanges: catalog=${exchanges(cat)} parquet=${exchanges(pq)}")
-    assert(pq.collect().toSeq == cat.collect().toSeq,
-      "bucketed layout must not change results")
+    smjPlans {
+      val q = SparkEntry.queries("q05_regional_revenue")
+      val pq = q(spark, dir)
+      val cat = q(spark, "metastore:graftb")
+      def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+        "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).size
+      assert(exchanges(cat) < exchanges(pq),
+        s"bucketed layout should drop join exchanges: catalog=${exchanges(cat)} parquet=${exchanges(pq)}")
+      assert(pq.collect().toSeq == cat.collect().toSeq,
+        "bucketed layout must not change results")
+    }
   }
 
   test("partitioned table prunes partitions on filter") {
     import org.apache.spark.sql.functions.col
     spark.sql("CREATE DATABASE IF NOT EXISTS graft")
-    graft.engine.Tables.events(spark, dir)
-      .write.partitionBy("event_type").mode("overwrite")
-      .saveAsTable("graft.events_p")
+    graft.engine.Catalog.partitionize(
+      graft.engine.Tables.events(spark, dir), "graft.events_p", "event_type")
     val q = spark.table("graft.events_p").filter(col("event_type") === "click")
     val scan = q.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") || scan.contains("event_type"))

@@ -1,24 +1,15 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ReusedExchangeExec, ShuffleExchangeExec}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Commission
 
 /** Unit tests for the commission dataflow against the reference's exact
   * semantics (FIXTURES.md §B canonical scenario; reference behavior at
   * render-complete-deploy.js:246-316). */
-class CommissionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CommissionSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   import org.apache.spark.sql.functions._
 
   /** Chain u0←u1←…←u11: referrals row (referrer=u_i, referred=u_{i+1}). */

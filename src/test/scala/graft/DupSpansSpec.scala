@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Dedup
 
 /** Exact-substring duplicate spans (q129 / Dedup.dupSpans): planted
@@ -11,13 +9,10 @@ import graft.engine.Dedup
   * (marked gram positions ≤ K apart fuse into one region) and
   * within-document repetition counting toward the ≥2 census.
   */
-class DupSpansSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DupSpansSpec extends SparkSuite {
+  // every test runs at the 8-way shuffle width the suite was written for
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   private def stats(docs: Seq[(Long, String)], k: Int): Map[Long, (Long, Long, Long, Long)] = {
     import spark.implicits._

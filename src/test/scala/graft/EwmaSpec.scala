@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The affine-composition EWMA (graft.functions.EwmaAffine): the
   * properties the hash oracle can't see — bounded state (no
   * collect_list in the plan), partitioning invariance, agreement with
   * the naive sequential recurrence, and the defensive out-of-order
   * stitch path. */
-class EwmaSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EwmaSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   /** Deterministic synthetic series: 7 users × up to 400 points. */

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{round, row_number}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Extended
 
 /** Semantic invariants for the round-2 Extended operators (value-level
   * correctness is the DuckDB oracle; these pin the properties the
   * oracle can't express: determinism, cross-query consistency, bounds). */
-class ExtendedSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExtendedSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("q44 pivot cells sum to the unpivoted totals") {

@@ -10,16 +10,13 @@ import graft.plans.GraftExtensions
   * Plans must be file-backed — literal LocalRelations constant-fold
   * entirely before the assertion could see the expression. */
 class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  // Session extensions are a static setting, so the two extension
+  // suites share a test JVM of their own.
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .withExtensions(new GraftExtensions)
+    .getOrCreate()
 
   val dir = "/root/testdata/sf0.001"
 

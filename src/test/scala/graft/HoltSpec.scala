@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The 2×2 affine-composition Holt smoother (graft.functions
   * .HoltAffine): the properties the hash oracle can't see — bounded
@@ -10,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequential level/trend recurrence, and the defensive out-of-order
   * path. Mirrors EwmaSpec, which pins the same contract for the
   * scalar (1×1) case. */
-class HoltSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HoltSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   private def fixture = {

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Dedup
 
 /** Incremental connected components over append-only edge deltas:
   * merging on the contracted component graph must reproduce the full
   * recompute exactly, touching only affected components. */
-class IncrementalComponentsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IncrementalComponentsSpec extends SparkSuite {
   private def labels(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
     import spark.implicits._
     df.select($"doc_id", $"cluster_id").as[(Long, Long)].collect().toSet

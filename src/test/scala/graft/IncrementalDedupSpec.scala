@@ -1,19 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.engine.Dedup
 
 /** End-to-end incremental near-dup maintenance: signatures + index
   * probe + contracted-graph merge over a NEW document batch must
   * reproduce the full pipeline re-run on the union corpus. */
-class IncrementalDedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalDedupSpec extends SparkSuite {
+  // every test runs at the 8-way shuffle width the suite was written for
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   val dir = "/root/testdata/sf0.001"
 
@@ -38,52 +34,44 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("batch ingest through the incremental path equals the full re-run") {
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val docs = graft.engine.Tables.documents(spark, dir)
-        .select($"doc_id", $"text")
-      val old = docs.filter($"doc_id" < 400L)
-      val batch = docs.filter($"doc_id" >= 400L)
-      assert(batch.count() > 0 && old.count() > 0)
+    val docs = graft.engine.Tables.documents(spark, dir)
+      .select($"doc_id", $"text")
+    val old = docs.filter($"doc_id" < 400L)
+    val batch = docs.filter($"doc_id" >= 400L)
+    assert(batch.count() > 0 && old.count() > 0)
 
-      val (prevBands, prevLabels) = fullState(old)
-      val (bands2, labels2) = Dedup.dedupIncremental(prevBands, prevLabels, batch)
-      val (fullBands, fullLabels) = fullState(docs)
+    val (prevBands, prevLabels) = fullState(old)
+    val (bands2, labels2) = Dedup.dedupIncremental(prevBands, prevLabels, batch)
+    val (fullBands, fullLabels) = fullState(docs)
 
-      // the maintained band index is the full index
-      assert(bands2.count() == fullBands.count())
-      assert(bands2.exceptAll(fullBands).count() == 0)
+    // the maintained band index is the full index
+    assert(bands2.count() == fullBands.count())
+    assert(bands2.exceptAll(fullBands).count() == 0)
 
-      // the maintained labels are row-identical to the full re-run
-      val (inc, full) = (labelSet(labels2), labelSet(fullLabels))
-      assert(inc == full, {
-        val onlyInc = inc -- full; val onlyFull = full -- inc
-        s"divergence: incremental-only ${onlyInc.take(5)}, full-only ${onlyFull.take(5)}"
-      })
-      // sanity: every document is labeled exactly once
-      assert(labels2.select($"doc_id").distinct().count() == docs.count())
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    // the maintained labels are row-identical to the full re-run
+    val (inc, full) = (labelSet(labels2), labelSet(fullLabels))
+    assert(inc == full, {
+      val onlyInc = inc -- full; val onlyFull = full -- inc
+      s"divergence: incremental-only ${onlyInc.take(5)}, full-only ${onlyFull.take(5)}"
+    })
+    // sanity: every document is labeled exactly once
+    assert(labels2.select($"doc_id").distinct().count() == docs.count())
   }
 
   test("a batch with no collisions only appends singleton clusters") {
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val docs = graft.engine.Tables.documents(spark, dir)
-        .select($"doc_id", $"text")
-      val old = docs.filter($"doc_id" < 400L)
-      val (prevBands, prevLabels) = fullState(old)
-      // synthetic batch whose shingles exist nowhere in the corpus
-      val batch = Seq(
-        (9001L, "zz1 zz2 zz3 zz4 zz5"),
-        (9002L, "yy1 yy2 yy3 yy4 yy5")).toDF("doc_id", "text")
-      val (_, labels2) = Dedup.dedupIncremental(prevBands, prevLabels, batch)
-      val m = labelSet(labels2).toMap
-      assert(m(9001L) == 9001L && m(9002L) == 9002L)
-      assert(labelSet(labels2) == labelSet(prevLabels) ++
-        Set((9001L, 9001L), (9002L, 9002L)))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    val docs = graft.engine.Tables.documents(spark, dir)
+      .select($"doc_id", $"text")
+    val old = docs.filter($"doc_id" < 400L)
+    val (prevBands, prevLabels) = fullState(old)
+    // synthetic batch whose shingles exist nowhere in the corpus
+    val batch = Seq(
+      (9001L, "zz1 zz2 zz3 zz4 zz5"),
+      (9002L, "yy1 yy2 yy3 yy4 yy5")).toDF("doc_id", "text")
+    val (_, labels2) = Dedup.dedupIncremental(prevBands, prevLabels, batch)
+    val m = labelSet(labels2).toMap
+    assert(m(9001L) == 9001L && m(9002L) == 9002L)
+    assert(labelSet(labels2) == labelSet(prevLabels) ++
+      Set((9001L, 9001L), (9002L, 9002L)))
   }
 }

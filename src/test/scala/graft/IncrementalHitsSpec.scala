@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Graph
 
 /** Incremental HITS over edge deltas: patching the stored per-round
   * history must land on EXACTLY the full-recompute integer scores,
   * with work proportional to the delta's influence cone. */
-class IncrementalHitsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalHitsSpec extends SparkSuite {
+  // every test runs at the 8-way shuffle width the suite was written for
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   val dir = "/root/testdata/sf0.001"
 
@@ -33,51 +28,43 @@ class IncrementalHitsSpec extends AnyFunSuite {
 
   test("patched history equals a full recompute after an edge-delta batch") {
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val (hHist, aHist) = Graph.hitsHistory(baseEdges)
+    val (hHist, aHist) = Graph.hitsHistory(baseEdges)
 
-      // rewire node 100 under node 7, attach two brand-new nodes,
-      // drop node 99's in-edge
-      val added = Seq((7L, 100L), (100L, 9001L), (9001L, 9002L))
-        .toDF("src", "dst")
-      val removed = Seq((50L, 100L), (49L, 99L)).toDF("src", "dst")
-      val edgesNew = baseEdges.exceptAll(removed).unionByName(added)
+    // rewire node 100 under node 7, attach two brand-new nodes,
+    // drop node 99's in-edge
+    val added = Seq((7L, 100L), (100L, 9001L), (9001L, 9002L))
+      .toDF("src", "dst")
+    val removed = Seq((50L, 100L), (49L, 99L)).toDF("src", "dst")
+    val edgesNew = baseEdges.exceptAll(removed).unionByName(added)
 
-      val full = Graph.hits(edgesNew)
-      val (inc, work) = Graph.hitsIncremental(edgesNew, added, removed,
-        hHist, aHist)
+    val full = Graph.hits(edgesNew)
+    val (inc, work) = Graph.hitsIncremental(edgesNew, added, removed,
+      hHist, aHist)
 
-      val (f, i) = (vec(full), vec(inc))
-      assert(f == i, {
-        val fm = f.map(t => t._1 -> t).toMap
-        val im = i.map(t => t._1 -> t).toMap
-        val diff = (fm.keySet ++ im.keySet)
-          .filter(k => fm.get(k) != im.get(k)).take(5)
-        s"scores differ at ${diff.map(k => (k, fm.get(k), im.get(k)))}"
-      })
-      assert(f.nonEmpty)
+    val (f, i) = (vec(full), vec(inc))
+    assert(f == i, {
+      val fm = f.map(t => t._1 -> t).toMap
+      val im = i.map(t => t._1 -> t).toMap
+      val diff = (fm.keySet ++ im.keySet)
+        .filter(k => fm.get(k) != im.get(k)).take(5)
+      s"scores differ at ${diff.map(k => (k, fm.get(k), im.get(k)))}"
+    })
+    assert(f.nonEmpty)
 
-      // maintenance ∝ delta cone: total recomputed slots across the
-      // 3 two-phase rounds must be far below |V| × rounds
-      val n = edgesNew.select($"src").union(edgesNew.select($"dst"))
-        .distinct().count()
-      assert(work < n, s"incremental work $work should be < |V| = $n")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    // maintenance ∝ delta cone: total recomputed slots across the
+    // 3 two-phase rounds must be far below |V| × rounds
+    val n = edgesNew.select($"src").union(edgesNew.select($"dst"))
+      .distinct().count()
+    assert(work < n, s"incremental work $work should be < |V| = $n")
   }
 
   test("empty delta reproduces the stored scores with zero recomputation") {
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val (hHist, aHist) = Graph.hitsHistory(baseEdges)
-      val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-      val (inc, work) = Graph.hitsIncremental(baseEdges, empty, empty,
-        hHist, aHist)
-      assert(work == 0L, s"no delta must mean no recomputation ($work)")
-      assert(vec(inc) == vec(Graph.hits(baseEdges)))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    val (hHist, aHist) = Graph.hitsHistory(baseEdges)
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val (inc, work) = Graph.hitsIncremental(baseEdges, empty, empty,
+      hHist, aHist)
+    assert(work == 0L, s"no delta must mean no recomputation ($work)")
+    assert(vec(inc) == vec(Graph.hits(baseEdges)))
   }
 }

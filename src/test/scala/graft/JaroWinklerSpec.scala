@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.JaroWinkler._
 
 /** Spec-verified fuzzy-name family (oracle exemption documented in the
   * scaladoc: float similarity parity across engines is not
   * bit-provable, so the contract is published reference pairs + exact
   * integer invariants, the sketches' discipline). */
-class JaroWinklerSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class JaroWinklerSpec extends SparkSuite {
   // Published reference pairs (Winkler 1990 examples as propagated by
   // the jellyfish/py_stringmatching docs), floored to exact micro.
   val published = Seq(

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused LangIdScore expression must be value-identical to the
   * composed scoring pipeline it replaces (posexplode top-40 → ×|langs|
@@ -15,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * value type unboxes a missing key's null to 0, turning the penalty
   * into |doc_rank − 0|; the boxed-value regression test below fails
   * loudly on that), argmin tie-breaks, and the empty-gram NULL. */
-class LangIdScoreSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LangIdScoreSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   /** The pre-fusion composed pipeline, verbatim. */

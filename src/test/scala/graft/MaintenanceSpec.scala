@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import graft.engine.Maintenance
 
@@ -10,14 +8,7 @@ import graft.engine.Maintenance
   * at-scale answer). The merged *view* is oracle-verified as
   * q71_merge_upsert; this spec pins the physical write path and the
   * delete/compaction behaviors the oracle can't see. */
-class MaintenanceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MaintenanceSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
   def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
@@ -390,7 +381,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // a previous JVM's warehouse dir survives on disk while this run's
     // catalog has no entry for it — clear the location so the managed
     // CREATE can't collide (LOCATION_ALREADY_EXISTS)
-    val loc = new org.apache.hadoop.fs.Path("spark-warehouse/graft_diff.db/orders_copy")
+    val loc = new org.apache.hadoop.fs.Path(
+      s"${spark.conf.get("spark.sql.warehouse.dir")}/graft_diff.db/orders_copy")
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
     val parquetSide = graft.engine.Tables.orders(spark, dir)
     parquetSide.write.mode("overwrite").saveAsTable("graft_diff.orders_copy")

@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** spark.ml MinHashLSH variant of near-dup detection (SURVEY.md §2.10
   * lists it as the library alternative to the SQL minhash in
   * graft.engine.Dedup). Cross-checks its recall against the exact
   * Jaccard pairs from q53. */
-class MlDedupSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MlDedupSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   test("MinHashLSH approxSimilarityJoin recalls the high-jaccard exact pairs") {

@@ -4,21 +4,12 @@ import java.awt.image.BufferedImage
 import java.nio.file.Files
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end image decode through the real distribution plumbing:
   * generated PNGs go binaryFile → mapPartitions → javax.imageio and
   * come back with true dimensions; non-image bytes take the documented
   * deterministic stub fallback. */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends SparkSuite {
   private def writePng(dir: java.nio.file.Path, name: String, w: Int, h: Int): Unit = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w)

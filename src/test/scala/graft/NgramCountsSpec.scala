@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The native NgramCounts expression must be value-identical to the
   * composed built-ins it replaces (explode words → pad → codepoint
   * substring grams → per-doc count): q142's oracle proves the QUERY
   * end-to-end, this pins the kernel itself on every fixture document
   * plus codepoint/whitespace edge cases. */
-class NgramCountsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NgramCountsSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   private def builtinCounts(df: org.apache.spark.sql.DataFrame) = {

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Job-level observability: `Dataset.observe` attaches metric
   * expressions that are computed DURING the action (no second scan) —
   * the production pattern for row-count reconciliation and data-quality
   * gates on 100 TB pipelines, where a separate `count()` pass would
   * double the read. */
-class ObservabilitySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ObservabilitySpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("observe() yields in-flight metrics that match a direct aggregation") {

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AsOfJoin, RangeJoin, Sessionize}
 import graft.functions.CosineSimilarity
 
 /** Unit specs for the custom operators on tiny literal frames. */
-class OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class OpsSpec extends SparkSuite {
   def ts(sec: Long): java.sql.Timestamp = new java.sql.Timestamp(sec * 1000)
 
   test("AsOfJoin.backward matches most recent right row at-or-before") {

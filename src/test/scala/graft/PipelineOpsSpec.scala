@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{count, explode, length, lit, split, trim}
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Dedup, TextOps}
 
 /** Semantic invariants for the training-pipeline operators added in
@@ -10,14 +8,7 @@ import graft.engine.{Dedup, TextOps}
   * q73 n-gram census, q74 decontamination). Value-level correctness is
   * the DuckDB oracle; these pin the graph/filter properties the oracle
   * can't express. */
-class PipelineOpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PipelineOpsSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("q57 clustering is consistent with the q51 pair list") {

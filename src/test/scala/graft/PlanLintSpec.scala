@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Static plan lint over the whole query surface: no query may plan an
   * unintentional cartesian product or nested-loop join — the two
   * shapes that silently work at sf0.1 and detonate at 100 TB.
   * Intentional exceptions are pinned explicitly. */
-class PlanLintSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanLintSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   /** Queries allowed to contain a broadcast nested-loop / cartesian:
@@ -195,9 +186,7 @@ class PlanLintSpec extends AnyFunSuite {
     // fallback's shape is the gate's doing, not the planner's own
     // size estimate of the tiny test frame.
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val big = (1 to 64).map(i => (i.toLong, s"t$i")).toDF("doc_id", "term")
       val side = (1 to 16).map(i => (i.toLong, i * 10L)).toDF("doc_id", "dl")
       def planOf(measured: Long): String =
@@ -211,7 +200,7 @@ class PlanLintSpec extends AnyFunSuite {
         s"measured>gate must NOT broadcast:\n$over")
       assert(over.contains("SortMergeJoin") || over.contains("ShuffledHashJoin"),
         s"fallback must be a co-partitioned shuffle join:\n$over")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("q163's sort+RLE pair count matches groupBy count exactly") {

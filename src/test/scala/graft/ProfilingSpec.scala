@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of the data-quality family (q148-q152) beyond the
   * oracle's hash-equality: BPE greedy-merge semantics replayed
   * independently in JVM string ops, profiler metric invariants,
   * constraint-suite red/green split, and winsorization bounds. */
-class ProfilingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ProfilingSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   test("q148's first merge is the true most-frequent adjacent char pair") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 import graft.ops.{AsOfJoin, Sessionize, SkewJoin}
 
@@ -10,14 +8,7 @@ import graft.ops.{AsOfJoin, Sessionize, SkewJoin}
   * inputs: conservation of money in the commission dataflow, window
   * aggregation vs sequential folds, dedup idempotence, and operator
   * equivalence against naive implementations. */
-class PropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PropertySpec extends SparkSuite {
   def ts(sec: Long): java.sql.Timestamp = new java.sql.Timestamp(sec * 1000)
 
   test("conservation: commissions + profit = price whenever profit > 0") {

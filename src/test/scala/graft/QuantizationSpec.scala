@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{Similarity, Tables => T}
 
 /** Int8 embedding quantization (Similarity.quantizeInt8): 4× smaller
@@ -12,14 +10,7 @@ import graft.engine.{Similarity, Tables => T}
   * error (≤ scale/2 by construction) and the end-to-end cosine drift
   * on real vector pairs.
   */
-class QuantizationSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class QuantizationSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   test("quantized values are int8 and reconstruction error is within scale/2") {

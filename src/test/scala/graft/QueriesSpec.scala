@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: every declared operator query executes at sf0.001, the
   * driver contract invariants hold. (Value-level correctness is the
   * driver's DuckDB oracle — reproduce locally with scripts/check.py.) */
-class QueriesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class QueriesSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("entry returns rows (driver t1 smoke)") {

@@ -1,9 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-class RecursiveCteProbe extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder().master("local[2]")
-    .config("spark.ui.enabled", "false").getOrCreate()
+class RecursiveCteProbe extends SparkSuite {
   test("probe: WITH RECURSIVE support") {
     val out = spark.sql(
       "WITH RECURSIVE t(n) AS (SELECT 1 UNION ALL SELECT n+1 FROM t WHERE n < 5) SELECT sum(n) FROM t")

@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.api.{Rehive, RehiveData}
 
 /** End-to-end route-level semantics over reference-domain fixtures
   * (FIXTURES.md §B): a reference user switching to this engine calls
   * these facade methods in place of the Express routes. */
-class RehiveApiSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RehiveApiSpec extends SparkSuite {
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
   /** Canonical world: chain u0←…←u11, creator uC, one package. */

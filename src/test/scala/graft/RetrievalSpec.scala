@@ -1,21 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of the retrieval family (q176-q179) beyond the oracle's
   * hash-equality: RRF fusion replayed from the two arms independently,
   * metric definitions (MRR/nDCG/AP) replayed in plain JVM arithmetic
   * over the exact cosine ranking, and DSIR weight structure checks. */
-class RetrievalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RetrievalSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   /** The exact cosine ranking q177/q178 are defined over, replayed in

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Runtime bloom-filter join pruning — the AQE-era mechanism that cuts
   * the probe side of a shuffle join down to rows that can possibly
@@ -11,27 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * fraction of it; the spec pins that Catalyst actually injects the
   * filter for the selective-dimension shape so a conf regression can't
   * silently drop it. */
-class RuntimeFilterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RuntimeFilterSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
 
   test("selective dim filter injects a bloom filter on the fact side") {
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      // force a shuffle join (broadcast joins don't need the filter) and
-      // let the tiny fixture qualify as a "large" application side
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    // force a shuffle join (broadcast joins don't need the filter) and
+    // let the tiny fixture qualify as a "large" application side
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       val orders = graft.engine.Tables.orders(spark, dir)
         .filter(col("o_orderkey") < 100)
       val li = graft.engine.Tables.lineitem(spark, dir)
@@ -42,9 +27,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
         s"expected an injected bloom runtime filter on lineitem:\n$plan")
       // and the filtered result still agrees with the unfiltered-join shape
       assert(joined.count() > 0)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

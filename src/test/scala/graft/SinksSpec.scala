@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Source/sink surface (SURVEY.md §2.1 S3/S8): append/overwrite
   * parquet writes, CSV and JSON round-trips with declared schemas, and
   * the plain scalar-UDF extension point (§2.9) against its built-in
   * equivalent. */
-class SinksSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SinksSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.001"
   def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString

@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Approximate/sketch aggregates (the 100 TB substitutes for exact
   * DISTINCT/percentile — SURVEY.md §2.4 notes them as engine-provided).
   * No DuckDB oracle is possible (sketch internals differ per engine),
   * so these pin accuracy bounds against the exact answers instead. */
-class SketchSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SketchSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   test("approx_count_distinct within 5% of exact (HLL)") {

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Analytic properties of the sketch/chunking/gap-fill operators that
   * the hash-equality oracle can't express: estimator error bounds, the
   * CMS one-sided guarantee, and chunk/grid reconstruction invariants. */
-class SketchesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SketchesSpec extends SparkSuite {
   val dir = "/root/testdata/sf0.01"
 
   test("KMV estimate lands within the theoretical relative-error band") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Dedup
 
 /** Hot-band skew evidence (SCALE.md): an LSH band bucket stuffed with
@@ -14,14 +12,10 @@ import graft.engine.Dedup
   * the hot bucket's full matrix (the single-reducer failure mode).
   * AQE is disabled so partition counts are deterministic to assert on.
   */
-class SkewSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SkewSpec extends SparkSuite {
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "false")(super.withFixture(test))
 
   private def fixture = {
     import spark.implicits._

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SeqSource
 
 /** Planning-behavior specs for the custom DataSource V2 connector
@@ -12,14 +10,7 @@ import graft.sources.SeqSource
   * the row builder. The result-level parity with DuckDB is q140 in the
   * driver matrix; this spec pins the parts only the plan can show.
   */
-class SourcesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SourcesSpec extends SparkSuite {
   private def seq(start: Long, end: Long, parts: Int) =
     spark.read.format("graft.sources.SeqSource")
       .option("start", start.toString).option("end", end.toString)

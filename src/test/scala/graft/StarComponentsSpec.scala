@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Dedup
 
 /** Large-star/small-star connected components (Dedup.componentsStar):
@@ -13,13 +11,10 @@ import graft.engine.Dedup
   * the round bound on a 300-node chain that per-hop propagation could
   * not finish inside its 32-round cap.
   */
-class StarComponentsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StarComponentsSpec extends SparkSuite {
+  // every test runs at the 8-way shuffle width the suite was written for
+  override def withFixture(test: NoArgTest) =
+    withConf("spark.sql.shuffle.partitions" -> "8")(super.withFixture(test))
 
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]

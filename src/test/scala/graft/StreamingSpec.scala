@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Streams
 import graft.streaming.Streams.{Event, SessionOut}
 
 /** Structured Streaming specs: incremental MemoryStream feed through
   * the real streaming plans (SURVEY.md §2.8). */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class StreamingSpec extends SparkSuite {
   val MIN = 60L * 1000000 // one minute in micros
 
   test("aggregation state survives a checkpointed stop/restart") {
@@ -54,20 +45,14 @@ class StreamingSpec extends AnyFunSuite {
     // spaces; RocksDB spills state to local disk with the same
     // semantics — this pins that switching providers changes nothing
     // but the storage engine
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
     val dir = "/root/testdata/sf0.001"
     val default = Streams.streamingDedup(spark, dir).collect().toSeq
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val rocks = Streams.streamingDedup(spark, dir).collect().toSeq
-      assert(rocks == default)
-      assert(rocks.nonEmpty)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val rocks = withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      Streams.streamingDedup(spark, dir).collect().toSeq
     }
+    assert(rocks == default)
+    assert(rocks.nonEmpty)
   }
 
   test("stream-stream interval join attributes purchases across batches") {

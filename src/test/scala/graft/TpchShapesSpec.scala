@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.TpchShapes
 
 /** Structural and semantic pins for the round-7 TPC-H shape family
@@ -13,14 +11,7 @@ import graft.engine.TpchShapes
   * Q12's conditional counts partitioning the joined line set.
   * Result-level parity is q249–q264 in the driver matrix.
   */
-class TpchShapesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TpchShapesSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private def q(name: String) = TpchShapes.queries(name)(spark, dir)
 
@@ -50,13 +41,10 @@ class TpchShapesSpec extends AnyFunSuite {
 
   test("Q2 argmin supplier is invariant to input partitioning") {
     val base = q("q255_tpch_q2").collect().toSeq
-    val repartitioned = {
-      // same query, shuffled input width — min(struct) is a full
-      // aggregate, so the argmin must not depend on partition layout
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      try q("q255_tpch_q2").collect().toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // same query, shuffled input width — min(struct) is a full
+    // aggregate, so the argmin must not depend on partition layout
+    val repartitioned = withConf("spark.sql.shuffle.partitions" -> "13") {
+      q("q255_tpch_q2").collect().toSeq
     }
     assert(base == repartitioned)
   }
