@@ -1,9 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import graft.engine.Commission
+import graft.plans.ParamLiteral
 
 /** Facade: every data-bearing API route of the reference mapped to its
   * engine dataflow over the reference-domain tables (schemas:
@@ -23,12 +27,37 @@ case class RehiveData(
     withdrawals: DataFrame, subscriptionPayments: DataFrame,
     notifications: DataFrame)
 
+/** The routes. Served one request at a time, a route costs mostly driver
+  * work (planning, generated code, job scheduling), so the plans keep
+  * that small:
+  *
+  *  - Key binding. A point route binds its id as a [[ParamLiteral]] typed
+  *    from the key column's schema: every id runs the same generated
+  *    classes (Spark writes a numeric literal into the code, so each new
+  *    id would compile anew), and the scan still gets `EqualTo(key, id)`.
+  *  - Sorting. A per-user list sorts in one partition instead of by a
+  *    global `orderBy`, which adds a range-sampling job and a shuffle.
+  *  - Jobs per request, over file tables and a request batch built on the
+  *    driver: `commissionFeed`, `notificationFeed`, `listPackages` 1;
+  *    `userWithPackage` 2 (package broadcast, result); `referralsOf` 2
+  *    (users broadcast, result); `giftCodesOf` 3 (package and users
+  *    broadcasts, result); `balances(d).filter(user_id = x)` 2 (aggregate
+  *    shuffle, result); `requestWithdrawals` 3 (aggregate shuffle,
+  *    balance broadcast, result); `redeem` 5 for a 20-code batch (batch,
+  *    package, redeemer and closure-cut broadcasts, result).
+  *    `RehiveServeSpec` holds each route to its count.
+  *
+  * None of this is a session rule (an injected optimizer or planner rule,
+  * or a changed conf): a caller serves these routes on its own session,
+  * which loads no extension, so a rule would not reach it. The plans carry
+  * the change themselves.
+  */
 object Rehive {
 
   /** GET /api/users/:id, /api/auth/me (:343-382) — point lookup with
     * the package eager-loaded as a struct (J1). */
   def userWithPackage(d: RehiveData, userId: String): DataFrame =
-    d.users.filter(col("id") === userId)
+    d.users.filter(keyIs(d.users, "id", userId))
       .join(broadcast(d.packages).withColumnRenamed("id", "pkg_id"),
         col("package_id") === col("pkg_id"), "left")
       .select(d.users.columns.map(col) :+
@@ -37,36 +66,53 @@ object Rehive {
           .as("package"): _*)
 
   /** GET /api/referrals (:384-399) — direct referrals of a user with
-    * the referred user nested (J2), newest first (O1). */
+    * the referred user nested (J2), newest first (O1). The users
+    * projection is broadcast whole on every request: a left outer
+    * broadcast join builds only its right side, and an inner join would
+    * drop referrals whose user row is missing. */
   def referralsOf(d: RehiveData, userId: String): DataFrame =
-    d.referrals.filter(col("referrer_id") === userId)
+    d.referrals.filter(keyIs(d.referrals, "referrer_id", userId))
       .join(d.users.select(col("id").as("ru_id"), col("full_name"),
         col("email"), col("package_id")),
         col("referred_id") === col("ru_id"), "left")
       .select(col("referred_id"), col("full_name"), col("email"),
         col("package_id"), col("created_at"))
-      .orderBy(col("created_at").desc, col("referred_id"))
+      .transform(sortedInOne(col("created_at").desc, col("referred_id")))
 
   /** GET /api/packages (:401-409) — catalog ordered by price (O2). */
   def listPackages(d: RehiveData): DataFrame =
-    d.packages.orderBy(col("price").asc, col("id"))
+    d.packages.transform(sortedInOne(col("price").asc, col("id")))
 
   /** GET /api/gift-codes (:436-450) — codes created by a user with
     * package and redeemer both eager-loaded (J3: two parallel FKs). */
   def giftCodesOf(d: RehiveData, userId: String): DataFrame =
-    d.giftCodes.filter(col("created_by") === userId)
+    d.giftCodes.filter(keyIs(d.giftCodes, "created_by", userId))
       .join(broadcast(d.packages.select(col("id").as("p_id"), col("name").as("package_name"),
         col("price"))), col("package_id") === col("p_id"), "left")
       .join(d.users.select(col("id").as("r_id"), col("full_name").as("redeemer_name")),
         col("redeemed_by") === col("r_id"), "left")
       .select(col("code"), col("package_name"), col("price"),
         col("is_redeemed"), col("redeemer_name"), col("created_at"))
-      .orderBy(col("created_at").desc, col("code"))
+      .transform(sortedInOne(col("created_at").desc, col("code")))
 
   /** POST /api/redeem-gift-code (:456-508) — the flagship write path as
     * one batch dataflow over all unredeemed-code redemption events:
     * guards (self-redeem ban :472, already-redeemed :465), then the
     * commission cascade (:208-316) via Commission.attribute.
+    *
+    * The guarded batch is planned once: it is left-joined to the
+    * closure, and each joined row yields its passive row and, at the
+    * level-1 row or at the no-match row, the batch row's direct row.
+    * That relies on the forest precondition of `Commission.ancestors`
+    * (a user with an upline has exactly one level-1 row).
+    *
+    * A batch whose optimized plan fits the session's
+    * `autoBroadcastJoinThreshold` (exactly sized when it is built on the
+    * driver, as a served request's is) is broadcast instead of the
+    * closure: the closure is cut to the batch's redeemers by a semi-join
+    * against the broadcast batch and only that cut is broadcast, and
+    * first-wins runs in one partition without a shuffle. A larger batch
+    * (q78 derives one from all orders) keeps the planner's choice.
     *
     * @param redemptions (code, redeemer_id) events
     * @return commission rows (redemption_id = gift code id) for every
@@ -75,7 +121,8 @@ object Rehive {
     */
   def redeem(d: RehiveData, redemptions: DataFrame,
              ancestorsOpt: Option[DataFrame] = None): DataFrame = {
-    val guarded = redemptions
+    val small = fitsBroadcast(redemptions)
+    val guarded = (if (small) broadcast(redemptions) else redemptions)
       .join(d.giftCodes.filter(!col("is_redeemed"))
         .select(col("id").as("gift_code_id"), col("code"),
           col("package_id"), col("created_by")), Seq("code"))
@@ -83,64 +130,124 @@ object Rehive {
     // First-wins per code: the reference marks the code redeemed right
     // after the first redemption (:476-482), so a second attempt in the
     // same batch must hit the !is_redeemed guard and pay nothing.
-    // Batch equivalent: keep exactly one redemption per gift_code_id
-    // (deterministic tie-break on redeemer_id — sequential arrival
-    // order doesn't exist in a batch).
-    val firstWins = Window.partitionBy(col("gift_code_id"))
-      .orderBy(col("redeemer_id"))
-    val valid = guarded
-      .withColumn("__rn", row_number().over(firstWins))
-      .filter(col("__rn") === 1).drop("__rn")
+    // Batch equivalent: keep exactly one redemption per gift code, the
+    // least redeemer_id (sequential arrival order doesn't exist in a
+    // batch); package and creator follow from the code's key. A small
+    // batch is one partition, which already groups every code.
+    val valid = (if (small) guarded.coalesce(1) else guarded)
+      .groupBy(col("gift_code_id"), col("package_id"), col("created_by"))
+      .agg(min(col("redeemer_id")).as("redeemer_id"))
       .join(broadcast(d.packages.select(col("id").as("pk_id"), col("price"),
         col("direct_commission_rate"), col("passive_commission_rate"))),
         col("package_id") === col("pk_id"))
-    val events = valid.select(
-      col("gift_code_id").as("redemption_id"),
-      col("redeemer_id"), col("created_by").as("creator_id"), col("price"),
-      col("direct_commission_rate"), col("passive_commission_rate"))
     // rates ride per-row (packages differ) — inline attribute() with
     // per-row rates rather than constants. Callers batching several
     // dataflows over one referral graph pass the closure in, persisted
     // (materialized-view reuse: the walk reads the whole edge table).
     val anc = ancestorsOpt.getOrElse(Commission.ancestors(d.referrals, 10))
-    val direct = events.select(col("redemption_id"),
-      col("creator_id").as("user_id"),
+    val upline = if (!small) anc else broadcast(anc.join(
+      broadcast(redemptions.select(col("redeemer_id").as("descendant"))),
+      Seq("descendant"), "left_semi"))
+    val matched = col("descendant").isNotNull
+    val direct = struct(col("created_by").as("user_id"),
       (col("price") * col("direct_commission_rate")).as("amount"),
       lit("direct").as("ctype"), lit(0L).as("level"))
-    val passive = events
-      .join(anc, events("redeemer_id") === anc("descendant"))
-      .select(col("redemption_id"), col("ancestor").as("user_id"),
-        (col("price") * col("passive_commission_rate")).as("amount"),
-        lit("passive").as("ctype"), col("level"))
-    direct.unionByName(passive)
+    val passive = struct(col("ancestor").as("user_id"),
+      (col("price") * col("passive_commission_rate")).as("amount"),
+      lit("passive").as("ctype"), col("level"))
+    valid.join(upline, col("redeemer_id") === col("descendant"), "left")
+      .select(col("gift_code_id").as("redemption_id"), explode(array(
+        when(!matched || col("level") === 1, direct), when(matched, passive))).as("c"))
+      .filter(col("c").isNotNull)
+      .select(col("redemption_id"), col("c.user_id"), col("c.amount"), col("c.ctype"),
+        col("c.level"))
   }
 
   /** GET /api/commissions (:510-517) — newest 100 for a user (AG7). */
   def commissionFeed(d: RehiveData, userId: String): DataFrame =
-    d.commissions.filter(col("user_id") === userId)
+    d.commissions.filter(keyIs(d.commissions, "user_id", userId))
       .orderBy(col("created_at").desc, col("id").desc).limit(100)
 
   /** Commission balance as a pure recomputation (AG1/AG2; replaces the
-    * mutable counter at :228,:287,:725): earned − approved withdrawals. */
-  def balances(d: RehiveData): DataFrame = {
-    val earned = d.commissions.groupBy(col("user_id"))
-      .agg(sum(col("amount")).as("earned"))
-    val out = d.withdrawals.filter(col("status") === "approved")
-      .groupBy(col("user_id")).agg(sum(col("amount")).as("withdrawn"))
-    earned.join(out, Seq("user_id"), "full_outer")
-      .select(col("user_id"),
-        (coalesce(col("earned"), lit(0.0)) - coalesce(col("withdrawn"), lit(0.0)))
-          .as("balance"))
-  }
+    * mutable counter at :228,:287,:725): earned − approved withdrawals,
+    * one aggregate over both ledgers keyed on `user_id`, so a caller's
+    * filter on `user_id` reaches both scans. */
+  def balances(d: RehiveData): DataFrame =
+    ledger(d).groupBy(col("user_id"), col("__nulls"))
+      .agg(sum(col("earned")).as("earned"), sum(col("withdrawn")).as("withdrawn"))
+      .select(col("user_id"), balance.as("balance"))
 
   /** POST /api/commission-withdrawals (:520-557) — requests validated
     * against the recomputed balance (P8 :541-545): returns each request
-    * tagged accepted/rejected. */
-  def requestWithdrawals(d: RehiveData, requests: DataFrame): DataFrame =
-    requests.join(balances(d), Seq("user_id"), "left")
+    * tagged accepted/rejected. Requests built on the driver name their
+    * users, and only those users' balances are aggregated. */
+  def requestWithdrawals(d: RehiveData, requests: DataFrame): DataFrame = {
+    val owed = localValues(requests, "user_id").fold(balances(d)) { case (ids, t) =>
+      broadcast(balances(d).filter(GraftBridge.column(
+        In(UnresolvedAttribute.quoted("user_id"), ids.map(v => new ParamLiteral(v, t))))))
+    }
+    requests.join(owed, Seq("user_id"), "left")
       .select(col("user_id"), col("amount"),
         when(col("amount") <= coalesce(col("balance"), lit(0.0)), "pending")
           .otherwise("rejected_insufficient_balance").as("status"))
+  }
+
+  /** Commissions and approved withdrawals as one ledger of
+    * (user_id, __nulls, earned, withdrawn) rows, aggregated on
+    * (user_id, __nulls). `__nulls` tags the source only where `user_id`
+    * is NULL, so NULL users of each source stay apart, as the full outer
+    * join this replaces kept them (NULL keys never match). */
+  private def ledger(d: RehiveData): DataFrame = {
+    def side(df: DataFrame, tag: Int, amount: String, none: String) =
+      df.select(col("user_id"), when(col("user_id").isNull, lit(tag)).as("__nulls"),
+        col("amount").as(amount), lit(null).as(none))
+    side(d.commissions, 0, "earned", "withdrawn").unionByName(
+      side(d.withdrawals.filter(col("status") === "approved"), 1, "withdrawn", "earned"))
+  }
+
+  private def balance: Column =
+    coalesce(col("earned"), lit(0.0)) - coalesce(col("withdrawn"), lit(0.0))
+
+  /** `col(key) === id`: a route's key filter. Against an integral key
+    * column the string id is cast on the driver, as the analyzer would
+    * cast it, and bound as a [[ParamLiteral]], so every id runs the same
+    * generated code while the scan still gets `EqualTo(key, id)` pushed
+    * down. An id that does not cast, and every other key type, keeps the
+    * plain comparison and so ends as it always did (under ANSI, a cast
+    * error; without, no rows or a truncated id). */
+  private def keyIs(df: DataFrame, key: String, id: String): Column =
+    df.schema(key).dataType match {
+      case t @ (ByteType | ShortType | IntegerType | LongType) =>
+        Option(Cast(Literal(id), t, None, EvalMode.TRY).eval()) match {
+          case Some(v) => col(key) === GraftBridge.column(new ParamLiteral(v, t))
+          case None => col(key) === id
+        }
+      case _ => col(key) === id
+    }
+
+  /** A per-user result in one partition, sorted: same order as a global
+    * `orderBy`, without its range-sampling job and shuffle. */
+  private def sortedInOne(order: Column*)(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions(order: _*)
+
+  /** Whether `df`'s optimized plan fits the session's broadcast
+    * threshold (read, never set). */
+  private def fitsBroadcast(df: DataFrame): Boolean = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
+  }
+
+  /** The distinct non-null values of column `c`, with its type, when `df`
+    * is built on the driver (its optimized plan is a `LocalRelation`):
+    * read from the plan, so no job runs. */
+  private def localValues(df: DataFrame, c: String): Option[(Seq[Any], DataType)] = {
+    val one = df.select(col(c))
+    val t = one.schema.head.dataType
+    one.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some((l.data.map(_.get(0, t)).filter(_ != null).distinct, t))
+      case _ => None
+    }
+  }
 
   /** PATCH /api/admin/commission-withdrawals/:id (:705-751) — decisions
     * applied as a merge view: status whitelist (P6 :710), balance
@@ -170,7 +277,7 @@ object Rehive {
 
   /** GET /api/notifications (:650-668) — newest 50 (O1+O3). */
   def notificationFeed(d: RehiveData, userId: String): DataFrame =
-    d.notifications.filter(col("user_id") === userId)
+    d.notifications.filter(keyIs(d.notifications, "user_id", userId))
       .orderBy(col("created_at").desc, col("id").desc).limit(50)
 
   /** Company profit per redemption (:303-311) — exposed for the admin

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import graft.engine.{Tables => T}
 import graft.engine.Exact._
@@ -45,10 +46,17 @@ object Commission {
   def ancestors(edges: DataFrame, maxLevels: Int = 10): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be at least 1, got $maxLevels")
     val e = edges.select(col("referred_id"), col("referrer_id"))
+    // Over an edge table whose plan reads cached data, each probe would
+    // scan the cache as its own table-cache query stage; adaptive
+    // execution never reuses those stages, so the broadcasts above them
+    // would not match either. The probes read the cached rows through
+    // one RDD instead, whose scans are identical: one broadcast again.
+    val probed = if (e.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+      e.sparkSession.createDataFrame(e.rdd, e.schema) else e
     // The edge table is thin (two keys per user) — broadcast it so every
     // probe is shuffle-free. On a cluster where users outgrow the
     // broadcast threshold, drop the hint (AQE falls back to shuffle joins).
-    def hop(l: Int) = broadcast(e.select(col("referred_id").as(s"d$l"),
+    def hop(l: Int) = broadcast(probed.select(col("referred_id").as(s"d$l"),
       col("referrer_id").as(s"a$l")))
     val wide = (2 to maxLevels).foldLeft(
       e.select(col("referred_id").as("descendant"), col("referrer_id").as("a1"))) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
   ReusedExchangeExec, ShuffleExchangeExec}
@@ -76,35 +75,6 @@ class CommissionSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(census(got) == census(expected))
   }
 
-  /** Jobs started while `body` runs, counted with a SparkListener. Job
-    * starts arrive on the listener bus in order, so `body` is bracketed
-    * between two marker jobs and only what starts between them counts. */
-  def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("job"))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobs-begin")
-      body
-      marker("jobs-end")
-      val deadline = System.currentTimeMillis() + 30000
-      while (!starts.contains("jobs-end") && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-    } finally sc.removeSparkListener(listener)
-    val seen = starts.toArray.toSeq
-    assert(seen.contains("jobs-end"), seen)
-    seen.dropWhile(_ != "jobs-begin").drop(1).takeWhile(_ != "jobs-end").size
-  }
-
   test("closure plans one broadcast, reused per level, no shuffle, in 2 jobs") {
     import spark.implicits._
     def closure() =
@@ -113,12 +83,21 @@ class CommissionSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(jobsDuring(closure().collect()) <= 2)
     // count() adds only its own final aggregation job on top
     assert(jobsDuring(closure().count()) <= 3)
-    val anc = closure()
-    anc.collect()
-    val plan = anc.queryExecution.executedPlan
-    assert(collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }.size == 1, plan)
-    assert(collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.size == 8, plan)
-    assert(collectWithSubqueries(plan) { case x: ShuffleExchangeExec => x }.isEmpty, plan)
+    def oneBroadcast(anc: org.apache.spark.sql.DataFrame): Unit = {
+      anc.collect()
+      val plan = anc.queryExecution.executedPlan
+      assert(collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }.size == 1, plan)
+      assert(collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.size == 8, plan)
+      assert(collectWithSubqueries(plan) { case x: ShuffleExchangeExec => x }.isEmpty, plan)
+    }
+    oneBroadcast(closure())
+    // the same shape over an edge table the caller has persisted
+    val edges = randomForest(3000, 11L).toDF("referred_id", "referrer_id").persist()
+    try {
+      edges.count()
+      oneBroadcast(Commission.ancestors(edges, 10))
+      assert(jobsDuring(Commission.ancestors(edges, 10).collect()) <= 2)
+    } finally edges.unpersist()
   }
 
   test("canonical redemption: direct 10 to creator, passive 5x10, profit 40") {
