@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, In, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import graft.engine.Bounded.sortedInOne
 import graft.engine.Commission
 import graft.plans.ParamLiteral
 
@@ -224,11 +225,6 @@ object Rehive {
         }
       case _ => col(key) === id
     }
-
-  /** A per-user result in one partition, sorted: same order as a global
-    * `orderBy`, without its range-sampling job and shuffle. */
-  private def sortedInOne(order: Column*)(df: DataFrame): DataFrame =
-    df.coalesce(1).sortWithinPartitions(order: _*)
 
   /** Whether `df`'s optimized plan fits the session's broadcast
     * threshold (read, never set). */

@@ -238,7 +238,7 @@ object Commission {
       // eagerly (localCheckpoint) while the setting is active —
       // appropriate for an operator whose execution model is iterative
       // materialization anyway. Iteration width ≠ CPU count; size it
-      // to the frontier (cf. Streams.tumblingCounts on state width).
+      // to the frontier (cf. Streams.rollupWidth on state width).
       val saved = s.conf.get("spark.sql.shuffle.partitions")
       // The closure materializes ~10·|customers| rows; Spark's default
       // cteRecursionRowLimit (1e6) trips at ~100k customers (the sf10

@@ -58,15 +58,17 @@ object Tables {
     * reads, and every downstream query sees one stable type. Integer
     * `div` avoids the double round-trip (ns-since-epoch exceeds 2^53). */
   def events(s: SparkSession, d: String): DataFrame =
-    if (metastoreDb(d).isDefined) {
-      // the registered table was saved through this accessor, so its
-      // ts column is already micro-precision TimestampType
-      load(s, d, "events")
-    } else {
+    normalizeTs(eventsStored(s, d))
+
+  /** The memoized events relation as stored, before [[normalizeTs]]: the
+    * streaming reader takes its schema from here rather than reading the
+    * footer again. A registered table was saved through [[events]], so
+    * its ts column is already micro-precision TimestampType. */
+  def eventsStored(s: SparkSession, d: String): DataFrame = {
+    if (metastoreDb(d).isEmpty)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = load(s, d, "events")
-      normalizeTs(raw)
-    }
+    load(s, d, "events")
+  }
 
   /** See [[events]]: raw nanos → µs TimestampType; NTZ → session-UTC
     * TimestampType; already-zoned passes through. Shared with the

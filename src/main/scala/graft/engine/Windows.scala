@@ -85,7 +85,8 @@ object Windows {
 
     // True Structured Streaming run (readStream → complete-mode memory
     // sink, drained synchronously) of the q40 tumbling aggregation —
-    // same oracle, real streaming plan.
+    // same oracle, real streaming plan, on rollup-sized state (at most
+    // 3,600 (window, type) keys; Streams.rollupWidth).
     "q43_stream_tumbling" -> ((s, dir) =>
       graft.streaming.Streams.tumblingCounts(s, dir)),
 
@@ -98,6 +99,7 @@ object Windows {
     // late rows are visible as the difference against q40's full
     // counts. See streaming/Streams.lateDataTumbling for why three
     // batches (the late-event watermark lags eviction by one batch).
+    // Same rollup-sized state as q43.
     "q239_stream_late_data" -> ((s, dir) =>
       graft.streaming.Streams.lateDataTumbling(s, dir)),
 

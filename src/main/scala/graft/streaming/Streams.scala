@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.engine.Bounded.sortedInOne
 import graft.engine.Exact._
 
 /** Structured Streaming surface (SURVEY.md §2.8): the reference's
@@ -52,45 +53,54 @@ object Streams {
     }
   }
 
-  /** Run `body` (a streaming start + drain) with the RocksDB state
-    * store provider. The default HDFSBackedStateStoreProvider keeps
-    * every state key ON THE JVM HEAP (a per-partition in-memory map,
-    * ×retained versions) — for the corpus-sized state here (q257's
-    * exact dedup holds one key per event; q245's join buffers both
-    * sides' in-flight rows) that is O(|events|) heap and killed the
-    * sf30 full rung at the 8 GiB protocol heap (guide §5: what tasks
-    * hold in memory). RocksDB keeps state in native memory + local
-    * disk with only block-cache overhead on the heap, so state
-    * capacity scales with DISK, which is exactly the 100 TB story.
-    * The provider is a storage backend choice read at query start —
-    * row-for-row identical results (oracle-confirmed); set-and-restore
-    * so batch queries in the same session are untouched. */
-  private def withRocksState[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    // changelog checkpointing: commit the batch's CHANGES, not a full
-    // RocksDB snapshot per commit — without it every micro-batch
-    // re-uploads the whole (corpus-sized) store and the provider's
-    // scaling win drowns in checkpoint I/O (measured ×2.8 on the q245
-    // join state at sf30).
-    val kc = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    // getAll, not getOption: an unset key must be unset again afterwards,
-    // not pinned to the default getOption reports for it
-    val saved = s.conf.getAll.get(k)
-    val savedC = s.conf.getAll.get(kc)
-    s.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(kc, "true")
-    try body
-    finally {
-      (saved match {
-        case Some(v) => s.conf.set(k, v)
-        case None    => s.conf.unset(k)
-      })
-      (savedC match {
-        case Some(v) => s.conf.set(kc, v)
-        case None    => s.conf.unset(kc)
-      })
+  /** Width for rollup-sized state (q43, q239): (1-hour window, event
+    * type) keys, at most 720 × 5 = 3,600 at every scale, since the events
+    * span a fixed 30 days. Every micro-batch commits once per state
+    * partition, so the width is sized for the state, not the CPUs. */
+  private val rollupWidth = "spark.sql.shuffle.partitions" -> "2"
+
+  /** Serializes the conf window of [[drain]] across threads. */
+  private val startLock = new Object
+
+  /** Streams `df` into the memory sink `qn` with `settings` on `s`,
+    * drains it, stops it and returns the sink's table.
+    *
+    * `start()` clones the caller's session, and the clone fixes what the
+    * stream runs with: the state width (the shuffle partitions), the
+    * state provider and artifact isolation. So the settings hold for
+    * `start()` alone, and each key goes back to its old value, or is
+    * unset again, before the drain. The stream still belongs to `s`, so
+    * `s.streams` listeners see its progress (a stream started in
+    * `s.newSession()` would not be seen).
+    *
+    * State stays on the session's provider, Spark's HDFS-backed store
+    * unless the caller sets another. That store keeps each partition's
+    * keys in a heap map. RocksDB keeps them in native memory and on local
+    * disk, which only corpus-sized state can need (q245's join buffers,
+    * q257's one key per event); on one commit it ran both slower than
+    * the HDFS-backed store at sf0.1 and at sf1 (q257 2.2× at sf1), and
+    * the last full sf30 rung ran both on HDFS-backed state without a
+    * failure. A caller whose state outgrows the heap sets the RocksDB
+    * provider on its session: the results are row-for-row the same
+    * (StreamingSpec).
+    *
+    * Every start turns artifact isolation off: with it on, each clone
+    * gets its own executor class loader and compiles the stream's
+    * generated classes again (12 per q43 call). These plans use no
+    * session artifacts, so the shared loader has every class they need. */
+  private def drain(s: SparkSession, qn: String, df: DataFrame, mode: OutputMode,
+                    settings: (String, String)*): DataFrame = {
+    val kv = settings :+ ("spark.sql.artifact.isolation.enabled" -> "false")
+    val q = startLock.synchronized {
+      val before = s.conf.getAll
+      kv.foreach { case (k, v) => s.conf.set(k, v) }
+      try df.writeStream.outputMode(mode).format("memory").queryName(qn).start()
+      finally kv.foreach { case (k, _) =>
+        before.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
+      }
     }
+    try q.processAllAvailable() finally q.stop()
+    s.table(qn)
   }
 
   /** Raw event-typed record (ts in epoch micros for the typed demo). */
@@ -105,7 +115,10 @@ object Streams {
     * over a catalog table's directory is exactly how a production
     * ingest tails a Hive-registered landing table, and it keeps the
     * whole streaming surface runnable against the catalog seam. */
-  def eventStream(s: SparkSession, dir: String): DataFrame =
+  def eventStream(s: SparkSession, dir: String): DataFrame = {
+    // also sets the nanos-as-longs read the file source needs, before
+    // any start clones the session
+    val schema = graft.engine.Tables.eventsStored(s, dir).schema
     graft.engine.Tables.metastoreDb(dir) match {
       case Some(db) =>
         // the registered table was saved through the batch accessor, so
@@ -113,45 +126,27 @@ object Streams {
         val loc = s.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier("events", Some(db)))
           .location.toString
-        val schema = s.table(s"$db.events").schema
         s.readStream.schema(schema).parquet(loc)
       case None =>
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
         // glob (not the bare file path): FileStreamSource requires its
         // basePath to be a directory, which the glob's parent provides
         graft.engine.Tables.normalizeTs(
           s.readStream.schema(schema).parquet(s"$dir/events.parque*"))
     }
+  }
 
   /** Tumbling 1-hour windowed aggregation as a true streaming query,
     * drained synchronously into a memory sink and returned as a batch
     * DataFrame (verified against the same oracle as the batch variant). */
   def tumblingCounts(s: SparkSession, dir: String): DataFrame = {
     val qn = "stream_tumbling_" + graft.engine.Scratch.key(dir)
-    // Streaming state is partitioned by the shuffle width AT QUERY START
-    // and every micro-batch pays one state-store commit (delta file +
-    // snapshot bookkeeping) PER PARTITION. The aggregate here has ~100s
-    // of distinct (window, type) keys — 8 stores is plenty; 32 just
-    // multiplies checkpoint-file churn. Sizing state partitions to key
-    // cardinality (not CPU count) is the real tuning rule at scale too:
-    // state width is fixed for the query's lifetime, so pick it for the
-    // state, and let stateless stages get their width from AQE.
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    withRocksState(s) {
-      val q = try eventStream(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), msum(col("value")).as("total_value"))
-        .select(col("w.start").as("window_start"), col("event_type"),
-          col("n"), col("total_value"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(qn).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(qn).orderBy("window_start", "event_type")
+    val agg = eventStream(s, dir)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), msum(col("value")).as("total_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("n"), col("total_value"))
+    drain(s, qn, agg, OutputMode.Complete(), rollupWidth)
+      .transform(sortedInOne(col("window_start"), col("event_type")))
   }
 
   /** Watermarked sliding-window aggregation (late data beyond 2 hours
@@ -165,32 +160,24 @@ object Streams {
     * batch equivalence. */
   def watermarkedSliding(s: SparkSession, dir: String): DataFrame = {
     val qn = "stream_sliding_" + graft.engine.Scratch.key(dir)
-    val q = eventStream(s, dir)
+    val agg = eventStream(s, dir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("n"))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName(qn).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(qn).orderBy("window_start")
+    drain(s, qn, agg, OutputMode.Append()).orderBy("window_start")
   }
 
   /** Stateful streaming dedup on event_id with a watermark bound on
     * state retention. */
   def streamingDedup(s: SparkSession, dir: String): DataFrame = {
     val qn = "stream_dedup_" + graft.engine.Scratch.key(dir)
-    val q = eventStream(s, dir)
+    val agg = eventStream(s, dir)
       .withWatermark("ts", "1 hour")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName(qn).start()
-    q.processAllAvailable()
-    q.stop()
-    s.table(qn).orderBy("event_type")
+    drain(s, qn, agg, OutputMode.Complete()).orderBy("event_type")
   }
 
   /** Streaming dedup over a PLANTED duplicate replay — the cross-batch
@@ -248,23 +235,17 @@ object Streams {
       stageBatch(ev.filter($"event_id" % 5 === 0), "b2", t0 + 60000L,
         fullCopy = false)
     }
-    // Width stays the SESSION width here (the tumblingCounts rule cuts
+    // Width stays the SESSION width here (the rollupWidth rule cuts
     // the other way): dedup state is ~|events| KEYS — corpus-sized,
     // not rollup-sized — so per-partition state serialization dominates
-    // the per-batch commit overhead and narrowing to 8 serializes it.
-    withRocksState(s) {
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getAbsolutePath)
-        .dropDuplicates("event_id")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_unique"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(qn).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(qn).orderBy("event_type")
+    // the per-batch commit overhead and narrowing the width serializes it.
+    val agg = s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(inDir.getAbsolutePath)
+      .dropDuplicates("event_id")
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_unique"))
+    drain(s, qn, agg, OutputMode.Complete()).orderBy("event_type")
   }
 
   /** Watermarked tumbling counts over a PLANTED three-batch replay —
@@ -352,26 +333,17 @@ object Streams {
       stageBatch(heartbeat, "b2", t0 + 60000L, fullCopy = false)
       stageBatch(ev.filter(late), "b3", t0 + 120000L, fullCopy = false)
     }
-    // state width 8 (the tumblingCounts sizing rule): 3 micro-batches
-    // each pay one state-store commit per partition, and the aggregate
-    // holds ~100s of keys — width is for the state, not the CPUs
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    withRocksState(s) {
-      val q = try s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.getAbsolutePath)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(qn).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(qn).orderBy("window_start", "event_type")
+    // rollup state: 3 micro-batches each pay one state-store commit per
+    // partition, and the aggregate holds at most 3,600 keys
+    val agg = s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(inDir.getAbsolutePath)
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
+    drain(s, qn, agg, OutputMode.Append(), rollupWidth)
+      .transform(sortedInOne(col("window_start"), col("event_type")))
   }
 
   /** The watermarked STREAM-STREAM interval join as a file-replayed,
@@ -452,20 +424,11 @@ object Streams {
         col("c.event_id").as("click_id"), col("c.ts").as("click_ts"),
         col("p.event_id").as("purchase_id"), col("p.ts").as("purchase_ts"),
         col("p.value").as("amount"))
-    // join state width 8 (the tumblingCounts sizing rule): each side
-    // buffers ≤ one watermark-interval of rows per partition and every
-    // micro-batch commits per-partition state deltas — size for state
-    // cardinality, not CPU count
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    withRocksState(s) {
-      val q = try joined.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(qn).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      q.processAllAvailable()
-      q.stop()
-    }
-    s.table(qn).orderBy("user_id", "click_id", "purchase_id")
+    // join state width 8: each side buffers ≤ one watermark-interval of
+    // rows per partition and every micro-batch commits per-partition
+    // state deltas — size for state cardinality, not CPU count
+    drain(s, qn, joined, OutputMode.Append(), "spark.sql.shuffle.partitions" -> "8")
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   /** One document's claim on one LSH band bucket: `claimedBy` is the

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQueryListener}
 import graft.streaming.Streams
 import graft.streaming.Streams.{Event, SessionOut}
 
@@ -8,6 +13,61 @@ import graft.streaming.Streams.{Event, SessionOut}
   * the real streaming plans (SURVEY.md §2.8). */
 class StreamingSpec extends SparkSuite {
   val MIN = 60L * 1000000 // one minute in micros
+
+  /** The state operators of every stream `body` starts, as a listener on
+    * the caller's `spark.streams` sees them, once each of those streams
+    * has terminated (progress events reach a listener before the
+    * termination event). */
+  private def stateOpsOf(body: => Unit): Seq[StateOperatorProgress] = {
+    val started, ended = ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ops = new ConcurrentLinkedQueue[StateOperatorProgress]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = { started.add(e.runId); () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(ops.add)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = { ended.add(e.runId); () }
+    }
+    def done = !started.isEmpty && ended.containsAll(started)
+    spark.streams.addListener(listener)
+    try {
+      body
+      val deadline = System.currentTimeMillis() + 30000
+      while (!done && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.streams.removeListener(listener)
+    assert(done, s"started $started, terminated $ended")
+    ops.asScala.toSeq
+  }
+
+  private val tiny = "/root/testdata/sf0.001"
+  private val rollups = Seq[(String, SparkSession => DataFrame)](
+    "q43" -> (Streams.tumblingCounts(_, tiny)),
+    "q239" -> (Streams.lateDataTumbling(_, tiny)))
+
+  test("a rollup stream's second call in a session compiles no classes") {
+    rollups.foreach { case (name, q) =>
+      q(spark).collect()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      q(spark).collect()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before, name)
+    }
+  }
+
+  test("declared streams keep HDFS-backed state at their widths") {
+    (rollups.map { case (name, q) => (name, q, 2) } ++ Seq(
+      ("q245", Streams.streamStreamAttribution(_: SparkSession, tiny), 8),
+      ("q257", Streams.streamingDedupPlanted(_: SparkSession, tiny), 4))).foreach {
+      case (name, q, width) =>
+        val ops = stateOpsOf(q(spark).collect())
+        assert(ops.nonEmpty, name)
+        ops.foreach { o =>
+          assert(o.numShufflePartitions == width, name)
+          val metrics = o.customMetrics.keySet.asScala
+          assert(metrics.contains("loadedMapCacheHitCount"), s"$name: $metrics")
+          assert(!metrics.exists(_.startsWith("rocksdb")), s"$name: $metrics")
+        }
+    }
+  }
 
   test("aggregation state survives a checkpointed stop/restart") {
     import spark.implicits._
