@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.RoundHalfUp
 
 /** Bit-exact float aggregation helpers shared by every verified query.
   *
@@ -19,7 +20,16 @@ import org.apache.spark.sql.functions._
   * resulting double is bit-identical across Spark and DuckDB, and the
   * pattern keeps map-side partial aggregation fully effective — this is
   * *more* scalable than a double sum, not less (no ordering
-  * constraints, pure codegen'd arithmetic).
+  * constraints).
+  *
+  * The round is [[graft.functions.RoundHalfUp]]: on a double it is
+  * floor-and-compare arithmetic on |x| in generated code, equal to
+  * Spark's `round` for every double (`BigDecimal.valueOf` reads
+  * `Double.toString(x)`, which reads back as x and so lies on the same
+  * side of the representable tie k + 0.5 as x; `ExactSpec` checks both
+  * codegen modes), without Spark's per-row `BigDecimal`. Other input
+  * types keep Spark's `round`; the cast to long stays Spark's, so ANSI
+  * overflow and NaN errors are unchanged.
   *
   * The paired `*Sql` builders emit the byte-equivalent DuckDB oracle
   * expression (same association order, so identical IEEE semantics).
@@ -29,7 +39,7 @@ object Exact {
 
   /** Per-row exact scaling: round(x * 10000) as long. */
   def scaled(c: Column, scale: Int = MoneyScale): Column =
-    round(c * scale).cast("long")
+    RoundHalfUp.of(c * scale).cast("long")
 
   /** Order-independent exact money sum → double. */
   def msum(c: Column, scale: Int = MoneyScale): Column =

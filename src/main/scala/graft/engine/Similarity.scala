@@ -232,14 +232,16 @@ object Similarity {
     // (vec_id < 2000 ⇒ ≤40 queries at any sf — an eval benchmark is
     // fixed-size by nature): the brute-force scan stays |corpus|×40,
     // linear in data, and the result at most 40×5 rows, sorted in one
-    // partition. The cap is vacuous at the oracle sfs.
+    // partition. The cap is vacuous at the oracle sfs. The corpus side
+    // is spread (q154's device): the scoring stage then runs at full
+    // width instead of in the one-task scan of the one-row-group file.
     "q60_cosine_topk" -> ((s, dir) => {
       import s.implicits._
       val cos = CosineSimilarity.cosineSim(s) _
       val emb = T.embeddings(s, dir)
       val q = emb.filter($"vec_id" % 50 === 0 && $"vec_id" < 2000)
         .select($"vec_id".as("qid"), $"embedding".as("qe"))
-      val scored = emb.join(broadcast(q), $"vec_id" =!= $"qid")
+      val scored = T.spread(emb).join(broadcast(q), $"vec_id" =!= $"qid")
         .select($"qid", $"vec_id".as("cid"),
           round(cos($"qe", $"embedding"), 6).as("cos_sim"))
       val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"cid")
@@ -252,13 +254,15 @@ object Similarity {
     // query's sign bucket (≈1/16 of the corpus), top-3 per query.
     // Probe set capped at vec_id < 2000 (fixed-size eval benchmark,
     // vacuous at the oracle sfs) — per-query work is cell-local and
-    // the query count no longer grows with the corpus.
+    // the query count no longer grows with the corpus. The corpus side
+    // is spread as in q60.
     "q61_lsh_ann" -> ((s, dir) => {
       import s.implicits._
       val cos = CosineSimilarity.cosineSim(s) _
-      val emb = T.embeddings(s, dir).withColumn("bucket", bucketOf($"embedding"))
-      val q = emb.filter($"vec_id" % 25 === 0 && $"vec_id" < 2000)
-        .select($"vec_id".as("qid"), $"embedding".as("qe"), $"bucket")
+      val raw = T.embeddings(s, dir)
+      val emb = T.spread(raw).withColumn("bucket", bucketOf($"embedding"))
+      val q = raw.filter($"vec_id" % 25 === 0 && $"vec_id" < 2000)
+        .select($"vec_id".as("qid"), $"embedding".as("qe"), bucketOf($"embedding").as("bucket"))
       val scored = emb.join(broadcast(q), Seq("bucket"))
         .filter($"vec_id" =!= $"qid")
         .select($"qid", $"vec_id".as("cid"), $"bucket",

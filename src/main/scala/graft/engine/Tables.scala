@@ -97,8 +97,13 @@ object Tables {
     * and everything up to the first exchange (hash kernels, cosine
     * loops, shingling) inherits that one-task parallelism. The explicit
     * round-robin exchange costs one pass over a sub-10MB file and buys
-    * full-width execution for the map-heavy stage behind it. On a
-    * production layout (many files / row groups, maxPartitionBytes
+    * full-width execution for the map-heavy stage behind it. The
+    * brute-force cosine scorers spread the corpus side of their
+    * broadcast query-set join this way: q60, q61, q154, q182, q217 and
+    * the centroid family (q63, q77, q145, q196). q176's dense arm and
+    * q177/q178's labeled ranking do not: at 2,000 vectors the exchange
+    * cost them more than the one-task scoring (measured, `CHANGES.md`).
+    * On a production layout (many files / row groups, maxPartitionBytes
     * sized to the cluster) the scan splits by itself and this wrapper
     * is dropped — it exists because of the fixture layout, not the
     * algorithm. */

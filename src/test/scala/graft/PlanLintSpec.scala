@@ -1,11 +1,16 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 /** Static plan lint over the whole query surface: no query may plan an
   * unintentional cartesian product or nested-loop join — the two
   * shapes that silently work at sf0.1 and detonate at 100 TB.
   * Intentional exceptions are pinned explicitly. */
-class PlanLintSpec extends SparkSuite {
+class PlanLintSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   val dir = "/root/testdata/sf0.001"
 
   /** Queries allowed to contain a broadcast nested-loop / cartesian:
@@ -123,6 +128,26 @@ class PlanLintSpec extends SparkSuite {
     val p = plan("q02_point_lookup")
     assert(p.contains("PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey"),
       s"expected pushed equality filter:\n$p")
+  }
+
+  test("q60 scores at full width: a round-robin exchange feeds the streamed side") {
+    // embeddings.parquet is one row group, so without the exchange the
+    // whole brute-force scoring stage is one task
+    val df = SparkEntry.queries("q60_cosine_topk")(spark, dir)
+    df.collect()
+    val done = df.queryExecution.executedPlan
+    val joins = collect(done) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1, done)
+    val j = joins.head
+    val streamed = if (j.buildSide == BuildRight) j.left else j.right
+    val exchanges = collect(streamed) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges == Seq(RoundRobinPartitioning(spark.sparkContext.defaultParallelism)),
+      s"streamed side:\n$streamed")
+  }
+
+  test("Exact money sums plan the half-up kernel, not Spark's round") {
+    val p = plan("q31_passive_commissions")
+    assert(p.contains("round_half_up(") && !p.contains("round("), p)
   }
 
   test("top-k feeds plan as TakeOrderedAndProject, not global sort") {
