@@ -59,12 +59,14 @@ case class RoundHalfUpDouble(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x => {
+      // a non-nullable child puts this code in the caller's scope, once per use
+      val a = ctx.freshName("a"); val k = ctx.freshName("k"); val r = ctx.freshName("r")
       s"""
-         |double a = java.lang.Math.abs($x);
-         |if (a < ${RoundHalfUp.Integral}) {
-         |  double k = java.lang.Math.floor(a);
-         |  double r = (a - k >= 0.5) ? k + 1.0 : k;
-         |  ${ev.value} = ($x < 0.0) ? 0.0 - r : r;
+         |double $a = java.lang.Math.abs($x);
+         |if ($a < ${RoundHalfUp.Integral}) {
+         |  double $k = java.lang.Math.floor($a);
+         |  double $r = ($a - $k >= 0.5) ? $k + 1.0 : $k;
+         |  ${ev.value} = ($x < 0.0) ? 0.0 - $r : $r;
          |} else {
          |  ${ev.value} = $x;
          |}

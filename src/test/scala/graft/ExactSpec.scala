@@ -5,7 +5,7 @@ import java.lang.Math.{nextDown, nextUp}
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
-  Literal, Round, UnsafeProjection}
+  Literal, Multiply, Round, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.engine.Exact
@@ -69,6 +69,12 @@ class ExactSpec extends SparkSuite {
       assert(mismatches == 0, s"$mode: ${examples.result()}")
       row.setNullAt(0)
       assert(proj(row).isNullAt(0) && proj(row).isNullAt(1))
+      // two kernels over a non-nullable input share one generated method
+      val notNull = BoundReference(0, DoubleType, nullable = false)
+      val two = UnsafeProjection.create(Seq(RoundHalfUpDouble(notNull),
+        RoundHalfUpDouble(Multiply(Literal(-2.5), notNull))))
+      row.setDouble(0, 1.5)
+      assert(two(row).getDouble(0) == 2.0 && two(row).getDouble(1) == -4.0)
     }
   }
 
