@@ -22,7 +22,6 @@ case class RoundHalfUp(child: Expression) extends UnaryExpression with RuntimeRe
     case _ => new Round(child)
   }
   override def checkInputDataTypes(): TypeCheckResult = replacement.checkInputDataTypes()
-  override def prettyName: String = "round"
   // spelled as Spark's `round(x)`, so a generated column name stays the same
   override def sql: String = s"round(${child.sql}, 0)"
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -78,16 +78,6 @@ class ExactSpec extends SparkSuite {
     }
   }
 
-  test("the pitfall values round as Spark rounds them") {
-    for (x <- Seq(-0.49999999999999994, -0.5, -0.0, -1.5, 0.49999999999999994,
-        nextDown(-0.5), nextUp(-0.5), -TwoTo52 + 0.5, TwoTo52 - 0.5)) {
-      val want = java.math.BigDecimal.valueOf(x)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-      val got = RoundHalfUpDouble(Literal(x)).eval()
-      assert(bits(got.asInstanceOf[Double]) == bits(want), s"$x: $got vs $want")
-    }
-  }
-
   /** A frame of `values` read through an RDD, so the projection is not
     * folded into a local relation at optimization time. */
   private def frame(xs: Seq[Double]): DataFrame = {
@@ -106,7 +96,8 @@ class ExactSpec extends SparkSuite {
   }
 
   test("Exact.scaled on a double column plans the kernel and keeps Spark's values") {
-    val xs = values.iterator.filter(x => math.abs(x) < 1e14).take(300000).toSeq
+    // every 5th value, so both signs of each kind are in
+    val xs = values.indices.by(5).map(values).filter(x => math.abs(x) < 1e14)
     val df = frame(xs)
     for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
       withConf("spark.sql.codegen.factoryMode" -> mode,
@@ -125,10 +116,10 @@ class ExactSpec extends SparkSuite {
   test("Exact.scaled on long, int, decimal and float keeps Spark's values") {
     import spark.implicits._
     val rnd = new scala.util.Random(7L)
-    val df = (0 until 20000).map { i =>
+    val df = Seq.fill(20000) {
       val l = rnd.nextLong() % 100000000000L
-      (l, (l % 100000L).toInt, BigDecimal(l, 2), (l % 10000000L).toFloat / 100 + 0.005f, i)
-    }.toDF("l", "i", "d", "f", "n").repartition(4)
+      (l, (l % 100000L).toInt, BigDecimal(l, 2), (l % 10000000L).toFloat / 100 + 0.005f)
+    }.toDF("l", "i", "d", "f").repartition(4)
     for (c <- Seq("l", "i", "d", "f"); scale <- Seq(Exact.MoneyScale, 1, 100)) {
       val got = pairs(df, Exact.scaled(col(c), scale), round(col(c) * scale).cast("long"))
       assert(got.count { case (a, b) => a != b } == 0, s"$c × $scale")
